@@ -685,13 +685,10 @@ def bench_ingest(spark) -> dict:
 
         native = ps.read_parquet(os.path.join(tmp, "native"), spark=spark)
         # transfer_to_pandas_s is the RAW engine→pandas Arrow transfer —
-        # the number comparable to the reference's transfer sweep. The
-        # public compute() path additionally runs the fetch guard's
-        # engine-side probes (row-count short-circuit + exact byte agg
-        # for varwidth schemas); r6's apparent transfer regression
-        # (0.645→1.555 s) was that guard billing into this metric, so
-        # the two are now timed separately (guard delta ≈ 0.4 s at
-        # sf0.1, measured min-of-3 — see SCALING.md).
+        # the number comparable to the reference's transfer sweep.
+        # guarded_transfer_s is the public compute() path: the same single
+        # execution with the fetch cap counted on the streamed Arrow
+        # batches, so the two should agree within noise.
         t0 = time.perf_counter()
         pdf = native.to_spark().toPandas()
         transfer_s = time.perf_counter() - t0

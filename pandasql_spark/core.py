@@ -45,29 +45,42 @@ Scale notes (local[32] today, 1000 executors tomorrow):
 
 from __future__ import annotations
 
+import uuid
+import warnings
 from typing import Any, Iterable, Sequence
 
 import pandas as pd
+import pyarrow as pa
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkTypeError
+from pyspark.errors.exceptions.captured import unwrap_spark_exception
+from pyspark.serializers import CPickleSerializer, NoOpSerializer
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import local_connect_and_auth
 
 from .session import get_spark
 
 #: rows fetched by __repr__/_repr_html_ previews (never full-frame).
 REPR_ROWS = 20
 
-#: fetch-back guard for compute()/to_pandas(): None → auto (free driver
-#: memory, reference core.py:181-187 `_free_memory()`); an int caps the
-#: estimated fetch at that many bytes; float('inf') disables the guard.
+#: compute()/to_pandas() fetch cap, in bytes of result data received by
+#: the driver: None → auto (free driver memory, reference core.py:181-187
+#: `_free_memory()`); an int caps the fetch at that many bytes;
+#: float('inf') turns the cap off.
 _MAX_FETCH_BYTES: int | float | None = None
 
 
 def set_max_fetch_bytes(n: int | float | None) -> None:
-    """Configure the compute() fetch-back guard (None = auto: free
-    driver memory; float('inf') = disabled)."""
+    """Set the compute() fetch cap: the bytes of result data the driver
+    may receive before the fetch is stopped with MemoryError (None =
+    auto: free driver memory; float('inf') = no cap)."""
     global _MAX_FETCH_BYTES
     _MAX_FETCH_BYTES = n
 
@@ -84,84 +97,152 @@ def _free_driver_memory() -> int | None:
         pass
     return None
 
-def _approx_row_bytes(schema) -> int:
-    """Pessimistic-enough per-row byte estimate from the schema alone
-    (used to convert the fetch-byte cap into a row cap for the guard's
-    count probe; variable-width types get generous flat estimates)."""
 
-    def sz(dt) -> int:
-        if isinstance(dt, (T.BooleanType, T.ByteType)):
-            return 1
-        if isinstance(dt, T.ShortType):
-            return 2
-        if isinstance(dt, (T.IntegerType, T.FloatType)):
-            return 4
-        if isinstance(dt, T.DecimalType):
-            return 16
-        if isinstance(dt, T.StringType):
-            return 24
-        if isinstance(dt, T.BinaryType):
-            return 64
-        if isinstance(dt, T.ArrayType):
-            return 16 * sz(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return 16 * (sz(dt.keyType) + sz(dt.valueType))
-        if isinstance(dt, T.StructType):
-            return sum(sz(f.dataType) for f in dt.fields)
-        return 8  # long/double/timestamp/date and anything else fixed-width
-
-    return max(sum(sz(f.dataType) for f in schema.fields), 1)
-
-
-def _row_bytes_expr(sdf) -> SparkColumn:
-    """Per-row RESULT payload bytes as a Catalyst expression — the
-    fetch guard's measurement runs ENGINE-side (one distributed agg, no
-    Arrow transfer), so deciding whether a fetch is safe never itself
-    pulls data to the driver (the old 256-row ``toPandas`` probe could
-    pull GBs when single rows were multi-MB media payloads, and its
-    sample MEAN under-counted heavy-tailed widths — one 10 MB doc among
-    1 KB docs slipped through). Strings/binaries count their exact
-    octet length; nested types are measured via their JSON rendering
-    (conservative for numerics, exact-ish for text); fixed-width
-    primitives use the schema width."""
-    fixed = 0
-    var_terms = []
-    for f in sdf.schema.fields:
-        dt = f.dataType
-        col = sdf[f.name]
-        if isinstance(dt, (T.StringType, T.BinaryType)):
-            var_terms.append(F.coalesce(F.octet_length(col), F.lit(0)))
-            fixed += 16  # per-object header overhead
-        elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-            var_terms.append(
-                F.coalesce(F.octet_length(F.to_json(col)), F.lit(0))
-            )
-            fixed += 16
+def _arrow_batches(stream):
+    """(item, rows, bytes) for each item of a ``collectAsArrowToPython``
+    stream: record batches in arrival order, then the batch order list."""
+    for item in ArrowCollectSerializer().load_stream(stream):
+        if isinstance(item, pa.RecordBatch):
+            yield item, item.num_rows, item.nbytes
         else:
-            fixed += _approx_row_bytes(T.StructType([f]))
-    expr = F.lit(fixed).cast("long")
-    for t in var_terms:
-        expr = expr + t.cast("long")
-    return expr
+            yield item, 0, 0
 
 
-def _has_varwidth(schema) -> bool:
-    """True if any column's width is data-dependent (string / binary /
-    array / map, possibly nested) — i.e. the schema-only estimate can be
-    arbitrarily wrong and the fetch guard should measure a sample."""
+def _pickled_rows(stream):
+    """(rows, rows, bytes) for each pickled row batch of a
+    ``collectToPython`` stream; bytes are the pickled frame's length."""
+    for frame in NoOpSerializer().load_stream(stream):
+        rows = CPickleSerializer().loads(frame)
+        yield rows, len(rows), len(frame)
 
-    def chk(dt) -> bool:
-        if isinstance(dt, (T.StringType, T.BinaryType)):
-            return True
-        if isinstance(dt, T.ArrayType):
-            return True
-        if isinstance(dt, T.MapType):
-            return True
-        if isinstance(dt, T.StructType):
-            return any(chk(f.dataType) for f in dt.fields)
+
+def _capped_collect(sdf: SparkDataFrame, serve, read, cap: float) -> list:
+    """Run one collect action and read its result socket as it streams.
+
+    ``serve`` starts the action on the JVM and returns its socket info;
+    ``read(stream)`` yields (item, rows, bytes). Once the summed bytes
+    pass ``cap``, the fetch stops: the socket is closed, the action's
+    jobs are cancelled and the JVM serving thread is joined before
+    MemoryError is raised, so the driver never holds more than the cap
+    plus one batch and the session is ready for the next action. The
+    socket closes first because the JVM writes batches from the
+    scheduler's event loop: a write blocked on an unread socket would
+    hold up the cancellation."""
+    sc = sdf.sparkSession.sparkContext
+    tag = f"pandasql_spark-fetch-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)  # inherited by the JVM thread that runs the action
+    try:
+        with SCCallSiteSync(sc):
+            conn, secret, server = serve()
+    finally:
+        sc.removeJobTag(tag)
+    sockfile, sock = local_connect_and_auth(conn, secret)
+    sock.settimeout(None)
+    items: list = []
+    rows = nbytes = 0
+    over = False
+    stream = read(sockfile)
+    try:
+        for item, n, b in stream:
+            rows, nbytes = rows + n, nbytes + b
+            if nbytes > cap:
+                over = True
+                break
+            items.append(item)
+    finally:
+        stream.close()
+        sockfile.close()
+        sock.close()
+        if over:
+            items.clear()
+            sc.cancelJobsWithTag(tag)
+            try:
+                server.getResult()
+            except Py4JJavaError:
+                pass  # the cancelled job, or the write to the closed socket
+        else:
+            with unwrap_spark_exception():
+                server.getResult()
+    if over:
+        raise MemoryError(
+            f"compute() stopped after receiving {rows:,} rows ({nbytes:,} "
+            f"bytes), over the fetch cap of {cap:,.0f} bytes. Try accessing "
+            "a smaller subset of the data you need, e.g. df.head(n) or "
+            "df[:n].compute(), or write it out distributed with "
+            "to_parquet(); set_max_fetch_bytes(float('inf')) turns the "
+            "cap off."
+        )
+    return items
+
+
+def _use_arrow(sdf: SparkDataFrame, jconf) -> bool:
+    """toPandas()'s choice of Arrow: on when the session enables it and
+    the schema converts, else the row path (or raise, if fallback is off)."""
+    if not jconf.arrowPySparkEnabled():
         return False
+    try:
+        to_arrow_schema(sdf.schema, prefers_large_types=jconf.arrowUseLargeVarTypes())
+    except PySparkTypeError as e:
+        if not jconf.arrowPySparkFallbackEnabled():
+            raise
+        warnings.warn(f"compute() cannot use Arrow and falls back to rows: {e}")
+        return False
+    return True
 
-    return any(chk(f.dataType) for f in schema.fields)
+
+def _fetch_pandas(sdf: SparkDataFrame) -> pd.DataFrame:
+    """``sdf.toPandas()`` in ONE execution under the fetch cap.
+
+    The result streams in once, over Arrow when ``toPandas()`` would use
+    it and as pickled rows otherwise, and its bytes are counted as they
+    arrive (``_capped_collect``). The conversion follows ``toPandas()``
+    exactly: dates stay objects, and timezones and struct handling
+    follow the session confs."""
+    cap = _MAX_FETCH_BYTES if _MAX_FETCH_BYTES is not None else _free_driver_memory()
+    cap = float("inf") if cap is None else cap
+    jconf = sdf.sparkSession._jconf
+    columns = sdf.columns
+    timezone = jconf.sessionLocalTimeZone()
+    struct_mode = jconf.pandasStructHandlingMode()
+    if _use_arrow(sdf, jconf):
+        items = _capped_collect(sdf, sdf._jdf.collectAsArrowToPython, _arrow_batches, cap)
+        order = items.pop()
+        if items:
+            table = pa.Table.from_batches([items[i] for i in order])
+            # positional names: to_pandas cannot take duplicate ones
+            pdf = table.rename_columns(
+                [f"col_{i}" for i in range(table.num_columns)]
+            ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+            pdf.columns = columns
+        else:
+            pdf = pd.DataFrame(columns=columns)
+        convert = {
+            "struct_in_pandas": "dict" if struct_mode == "legacy" else struct_mode,
+            "error_on_duplicated_field_names": struct_mode == "legacy",
+        }
+    else:
+        frames = _capped_collect(sdf, sdf._jdf.collectToPython, _pickled_rows, cap)
+        rows = [row for frame in frames for row in frame]
+        if rows:
+            pdf = pd.DataFrame.from_records(rows, index=range(len(rows)), columns=columns)
+        else:
+            pdf = pd.DataFrame(columns=columns)
+        convert = {
+            "struct_in_pandas": "row" if struct_mode == "legacy" else struct_mode,
+            "error_on_duplicated_field_names": False,
+            "timestamp_utc_localized": False,
+        }
+    if len(pdf.columns) == 0:
+        return pdf
+    return pd.concat(
+        [
+            _create_converter_to_pandas(
+                field.dataType, field.nullable, timezone=timezone, **convert
+            )(pser)
+            for (_, pser), field in zip(pdf.items(), sdf.schema.fields)
+        ],
+        axis="columns",
+    )
 
 
 _FLOAT_TYPES = (T.DoubleType, T.FloatType, T.DecimalType)
@@ -417,7 +498,7 @@ class Arithmetic(Expression):
         return self._sdf.select(self._col.alias("res"))
 
     def compute(self) -> pd.Series:
-        return self.to_spark().toPandas()["res"]
+        return _fetch_pandas(self.to_spark())["res"]
 
 
 class Criterion(Expression):
@@ -577,81 +658,13 @@ class BaseFrame:
 
     def compute(self) -> Any:
         """Force materialization → pandas (reference ``compute()``,
-        core.py:91-112), behind a fetch-back guard: when the optimizer's
-        size estimate for the result exceeds the cap (default: free
-        driver memory — the reference's ``_out_of_memory`` behavior,
-        core.py:181-187), raise MemoryError instead of OOM-ing the
-        driver mid-``toPandas``. Override per call site with
-        ``set_max_fetch_bytes`` (``float('inf')`` disables)."""
-        return self._guarded_to_pandas()
-
-    def _guarded_to_pandas(self) -> pd.DataFrame:
-        cap = _MAX_FETCH_BYTES if _MAX_FETCH_BYTES is not None else _free_driver_memory()
-        if cap is not None and cap != float("inf"):
-            est = self.memory_usage()
-            # The plan-stat gate ALSO flat-rates variable-width data
-            # (~20 B/string in non-CBO sizeInBytes), so a genuinely
-            # over-cap document fetch can come in WAY under the cap on
-            # paper. For varwidth schemas, fall through to the probe
-            # whenever the stat is within 2^16 of the cap — document
-            # rows run 10^2–10^4 x the flat rate, and the probe itself
-            # is two bounded jobs, skipped entirely for comfortably
-            # small frames.
-            suspicious = (
-                est > cap
-                or (
-                    est > 0
-                    and (est << 16) > cap
-                    and _has_varwidth(self.to_spark().schema)
-                )
-            )
-            if suspicious:
-                # The non-CBO sizeInBytes statistic multiplies child
-                # sizes through joins — a tiny post-join aggregate can
-                # estimate petabytes. Two bounded engine-side probes
-                # confirm before raising, neither fetching data:
-                # 1. Row count: limit(cap_rows + 1).count() short-
-                #    circuits, catching absurd row counts in one cheap
-                #    pass even on petabyte results.
-                # 2. Exact bytes (varwidth schemas only): stage 1 just
-                #    bounded the result to <= cap_rows rows, so ONE
-                #    distributed agg of _row_bytes_expr measures the
-                #    EXACT payload size — immune to heavy-tailed widths
-                #    that a sample mean misses (one 10 MB doc among
-                #    1 KB docs), and it never Arrow-fetches the way the
-                #    old 256-row sample probe did.
-                sdf = self.to_spark()
-                row_bytes = _approx_row_bytes(sdf.schema)
-                cap_rows = min(int(cap // row_bytes), 2**31 - 2)
-                if sdf.limit(cap_rows + 1).count() > cap_rows:
-                    raise MemoryError(
-                        f"compute() would fetch more than {cap_rows:,} rows "
-                        f"(~{row_bytes} bytes/row, cap {cap:,.0f} bytes) to "
-                        "the driver. Try accessing a smaller "
-                        "subset of the data you need, e.g. df.head(n) or "
-                        "df[:n].compute(), or write it out distributed with "
-                        "to_parquet(); set_max_fetch_bytes(float('inf')) "
-                        "overrides the guard."
-                    )
-                if _has_varwidth(sdf.schema):
-                    measured = (
-                        sdf.select(_row_bytes_expr(sdf).alias("__b"))
-                        .agg(F.sum("__b"))
-                        .first()[0]
-                        or 0
-                    )
-                    if measured > cap:
-                        raise MemoryError(
-                            f"compute() would fetch ~{measured:,} bytes "
-                            f"(measured engine-side; cap {cap:,.0f}) to the "
-                            "driver. Try accessing a smaller subset of the "
-                            "data you need, e.g. df.head(n) or "
-                            "df[:n].compute(), or write it out distributed "
-                            "with to_parquet(); "
-                            "set_max_fetch_bytes(float('inf')) overrides "
-                            "the guard."
-                        )
-        return self.to_spark().toPandas()
+        core.py:91-112) in one execution under the fetch cap: the result's
+        bytes are counted as they stream in, and once they pass the cap
+        (default: free driver memory — the reference's ``_out_of_memory``
+        behavior, core.py:181-187) the fetch stops with MemoryError
+        instead of OOM-ing the driver. Set the cap with
+        ``set_max_fetch_bytes`` (``float('inf')`` turns it off)."""
+        return _fetch_pandas(self.to_spark())
 
     def to_pandas(self) -> Any:
         return self.compute()
@@ -669,7 +682,10 @@ class BaseFrame:
         """Estimated result size in bytes (reference ``memory_usage``,
         core.py:70-82, deep pandas usage of the cached result). Ours is
         the optimizer's size-in-bytes statistic — available WITHOUT
-        materializing, which is the only sane contract at 100 TB."""
+        materializing, which is the only sane contract at 100 TB. The
+        non-CBO statistic multiplies through joins, so it is only an
+        estimate: the compute() fetch cap counts the bytes it actually
+        receives and does not use it."""
         sdf = self.to_spark()
         return int(sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
@@ -1161,7 +1177,7 @@ class Projection(BaseFrame, Expression):
         return self.to_spark().distinct().count()
 
     def compute(self):
-        pdf = self._guarded_to_pandas()
+        pdf = _fetch_pandas(self.to_spark())
         if len(self._cols) == 1:
             return pdf[self._cols[0]]  # 1-col projection → Series
         return pdf

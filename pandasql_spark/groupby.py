@@ -29,7 +29,7 @@ from typing import Any, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame as SparkDataFrame
 
-from .core import AGG_FUNCS, BaseFrame, DataFrame, agg_columns
+from .core import AGG_FUNCS, BaseFrame, DataFrame, _fetch_pandas, agg_columns
 
 
 class Aggregate(BaseFrame):
@@ -197,7 +197,7 @@ class GroupedAggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> pd.DataFrame:
-        pdf = self._sdf.toPandas()
+        pdf = _fetch_pandas(self._sdf)
         if self._as_index:
             pdf = pdf.set_index(self._keys if len(self._keys) > 1 else self._keys[0])
             pdf = pdf.sort_index()
@@ -229,7 +229,7 @@ class GroupedMultiAggregate(GroupedAggregate):
         self._pairs = pairs
 
     def compute(self) -> pd.DataFrame:
-        pdf = self._sdf.toPandas()
+        pdf = _fetch_pandas(self._sdf)
         if self._as_index:
             pdf = pdf.set_index(self._keys if len(self._keys) > 1 else self._keys[0])
             pdf = pdf.sort_index()

@@ -244,3 +244,131 @@ def test_compute_guard_heavy_tailed_widths(spark):
         assert len(df.head(10).compute()) == 10  # bounded fetch still fine
     finally:
         set_max_fetch_bytes(None)
+
+
+def _payload_frame():
+    """The 50k-row, megabyte-sized frame of test_compute_fetch_guard."""
+    return ps.DataFrame(
+        pd.DataFrame({"x": range(50_000), "s": ["payload" * 8] * 50_000})
+    )
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the latest SQL execution, read after the listener bus
+    drained. Ids count every execution; the store's executionsCount()
+    stops growing once it holds spark.sql.ui.retainedExecutions."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return int(store.executionsList(n - 1, 1).head().executionId()) if n else -1
+
+
+def test_compute_cap_covers_grouped_and_arithmetic(spark):
+    """Grouped aggregates and arithmetic expressions fetch through the
+    same capped path as frames: a high-cardinality groupby or a
+    per-row expression over the 50k-row frame refuses under a 10 kB cap
+    and fetches in full under the auto cap."""
+    from pandasql_spark.core import set_max_fetch_bytes
+
+    df = _payload_frame()
+    fetches = {
+        "grouped": lambda: df.groupby("x").count().compute(),
+        "grouped_multi": lambda: df.groupby("x").agg(["count", "max"]).compute(),
+        "arithmetic": lambda: (df["x"] * 2).compute(),
+    }
+    try:
+        set_max_fetch_bytes(10_000)
+        for fetch in fetches.values():
+            with pytest.raises(MemoryError, match="smaller subset"):
+                fetch()
+    finally:
+        set_max_fetch_bytes(None)
+    for name, fetch in fetches.items():
+        assert len(fetch()) == 50_000, name
+
+
+def test_compute_is_one_execution(spark):
+    """compute() submits exactly one SQL execution on a join + groupby
+    frame (the q05 shape) whether the cap is auto, finite and passing,
+    or exceeded — the cap is counted on the fetch itself, never by
+    re-running the pipeline to probe its size."""
+    from pandasql_spark.core import set_max_fetch_bytes
+
+    a = ps.DataFrame(pd.DataFrame({"k": range(2_000), "g": [i % 500 for i in range(2_000)]}))
+    b = ps.DataFrame(pd.DataFrame({"k": range(2_000), "v": range(2_000)}))
+    agg = a.merge(b, on="k").groupby("g").sum()
+    out = agg[agg.v >= 0]  # HAVING: a plain DataFrame over the aggregate
+
+    def executions_of(fetch):
+        before = _last_execution_id(spark)
+        result = fetch()
+        return _last_execution_id(spark) - before, result
+
+    def over_cap():
+        with pytest.raises(MemoryError, match="rows"):
+            out.compute()
+
+    try:
+        for cap in (None, 10_000_000):  # auto, then a finite cap that passes
+            set_max_fetch_bytes(cap)
+            n, got = executions_of(out.compute)
+            assert (n, len(got)) == (1, 500)
+        set_max_fetch_bytes(100)
+        assert executions_of(over_cap) == (1, None)
+    finally:
+        set_max_fetch_bytes(None)
+
+
+def test_compute_abort_cleans_up(spark):
+    """A fetch stopped at the cap leaves the session clean: its jobs
+    are cancelled and drain from the status tracker long before the
+    uncancelled job could finish, no warning escapes, and the next
+    compute() on the same session returns the full result."""
+    import time
+    import warnings
+
+    from pandasql_spark.core import set_max_fetch_bytes
+
+    # 128 partitions x 4 rows x 250 ms: 32 s of task time, 2 kB a row
+    slow = ps.DataFrame(
+        sdf=spark.range(0, 512, 1, 128).selectExpr(
+            "id",
+            "repeat('x', 2000) AS s",
+            "reflect('java.lang.Thread', 'sleep', 250L) AS z",
+        )
+    )
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        set_max_fetch_bytes(10_000)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            with pytest.raises(MemoryError, match="smaller subset"):
+                slow.compute()
+    finally:
+        set_max_fetch_bytes(None)
+    deadline = time.monotonic() + 5
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert tracker.getActiveJobsIds() == []
+    got = _payload_frame().compute()
+    assert len(got) == 50_000
+    assert sorted(got["x"]) == list(range(50_000))
+
+
+def test_compute_cap_without_arrow(spark):
+    """The cap holds when the session fetches rows instead of Arrow
+    batches (``spark.sql.execution.arrow.pyspark.enabled=false``)."""
+    from pandasql_spark.core import set_max_fetch_bytes
+
+    df = _payload_frame()
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        set_max_fetch_bytes(10_000)
+        with pytest.raises(MemoryError, match="smaller subset"):
+            df.compute()
+        assert len(df.head(5).compute()) == 5
+    finally:
+        set_max_fetch_bytes(None)
+        spark.conf.set(key, prior)
