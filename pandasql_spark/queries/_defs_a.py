@@ -1689,9 +1689,8 @@ def q67_repetition_signals(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Gopher-style repetition quality signals
     (operators/repetition.py): per-document bigram stats — total
     bigrams, top-bigram count, top-bigram fraction, duplicated-bigram
-    fraction. Gate runs the default impl="numpy" path: one Arrow-batched
-    mapInPandas scan, ZERO shuffles (the impl="hof" column-expression
-    path and the oracle's explode+groupBy shape cross-check it)."""
+    fraction. One Arrow-batched mapInPandas scan, ZERO shuffles; the
+    oracle's explode+groupBy shape cross-checks it."""
     from pandasql_spark.operators.repetition import repetition_signals
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")

@@ -358,10 +358,10 @@ def test_minhash_string_ids_numpy_path(corpus, spark):
     Arrow-crashing string-id callers on the default path)."""
     sdf, pdf = corpus
     named = sdf.withColumn("doc_id", F.concat(F.lit("doc-"), F.col("doc_id")))
-    sigs = dedup.minhash_signatures(named, impl="numpy").toPandas()
+    sigs = dedup.minhash_signatures(named).toPandas()
     assert sigs["id"].map(lambda s: s.startswith("doc-")).all()
     # signatures identical to the long-id run — id type is metadata only
-    base = dedup.minhash_signatures(sdf, impl="numpy").toPandas()
+    base = dedup.minhash_signatures(sdf).toPandas()
     base_map = {f"doc-{r.id}": list(r.signature) for r in base.itertuples()}
     for r in sigs.itertuples():
         assert list(r.signature) == base_map[r.id]
@@ -369,6 +369,35 @@ def test_minhash_string_ids_numpy_path(corpus, spark):
     pairs = dedup.minhash_neardup_pairs(named, threshold=0.5).toPandas()
     found = {(r.id_a, r.id_b) for r in pairs.itertuples()}
     assert ("doc-0", "doc-25") in found and ("doc-1", "doc-26") in found
+
+
+def test_minhash_kernel_exact_values(spark):
+    """Pins the signature values: for hand-built base hashes fed through
+    ``hashed_df``, position i is min((a*h + b) mod 2^31-1) over the row's
+    hashes for the i-th (a, b) of ``_hash_coefficients``. One partition,
+    so every row shares one Arrow batch; an empty array hashes as [0]."""
+    p = 2**31 - 1
+    bh = {
+        1: [5, p - 1, 123456789],
+        2: [42],
+        3: [],
+        4: [7, 7, 1 << 30, 99, 0],
+        5: [p - 1, 1],
+    }
+    hashed = spark.createDataFrame(
+        sorted(bh.items()), "id long, bh array<long>"
+    ).coalesce(1)
+    got = {
+        r.id: list(r.signature)
+        for r in dedup.minhash_signatures(
+            hashed, id_col="id", num_hashes=8, seed=11, hashed_df=hashed
+        ).collect()
+    }
+    coeffs = dedup._hash_coefficients(8, 11)
+    assert got == {
+        i: [min((a * h + b) % p for h in (hs or [0])) for a, b in coeffs]
+        for i, hs in bh.items()
+    }
 
 
 def test_embedding_neardup_string_ids(spark):

@@ -1,14 +1,15 @@
 """Scalar embedding quantization: code correctness vs a numpy
 replication (same half-up rounding), the scale/2 error bound,
-constant-vector exactness, and the zero-shuffle plan claim."""
+constant-vector exactness, the audit report against a numpy+hashlib
+reference, NULL/empty vectors, and the zero-shuffle plan claim."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from pandasql_spark.operators.quantize import (
@@ -83,10 +84,46 @@ def test_zero_shuffle_plan(spark):
         assert "Exchange" not in plan
 
 
-def test_report_impls_bit_identical(spark):
+def _report_row(vec_id, v):
+    """quantization_report's row for one vector: exact half-up codes
+    (floor(t) plus one when the fractional part t - floor(t) is >= 0.5),
+    the true reconstruction error, and md5 of the comma-joined codes."""
+    x = np.asarray(v, np.float64)
+    lo = hi = 0.0
+    if len(x):
+        lo, hi = float(x.min()), float(x.max())
+    if hi == lo:
+        scale, q, err = 0.0, np.zeros(len(x), np.int64), 0.0
+    else:
+        scale = (hi - lo) / 255.0
+        t = (x - lo) / scale
+        q = np.floor(t).astype(np.int64) + (t - np.floor(t) >= 0.5)
+        err = float(np.abs(x - (lo + q * scale)).max())
+    fp = hashlib.md5(",".join(str(int(c)) for c in q).encode()).hexdigest()
+    return (vec_id, len(x), round(lo, 6), round(scale, 6), round(err, 6), fp)
+
+
+def test_report_matches_reference(spark):
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = sorted(map(tuple, quantization_report(e, impl="numpy").collect()))
-    b = sorted(map(tuple, quantization_report(e, impl="expr").collect()))
-    assert a == b
-    with pytest.raises(ValueError, match="impl"):
-        quantization_report(e, impl="arrow")
+    got = sorted(map(tuple, quantization_report(e).collect()))
+    expected = sorted(
+        _report_row(r["vec_id"], r["embedding"])
+        for r in e.select("vec_id", "embedding").collect()
+    )
+    assert len(got) == len(expected) > 0
+    assert got == expected
+
+
+def test_report_null_and_empty_vectors(spark):
+    # a NULL embedding (parquet list columns are nullable) reports its id
+    # with NULL stats instead of crashing the kernel; an empty vector
+    # keeps its degenerate all-zero row
+    df = spark.createDataFrame(
+        [(1, None), (2, []), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    for frame in (df, df.coalesce(1)):  # a batch per row, then one batch
+        got = {r["vec_id"]: tuple(r)[1:] for r in quantization_report(frame).collect()}
+        assert got[1] == (None, None, None, None, None)
+        assert got[2] == (0, 0.0, 0.0, 0.0, hashlib.md5(b"").hexdigest())
+        assert got[3] == _report_row(3, [0.0, 1.0])[1:]

@@ -1,8 +1,12 @@
 """SemDeDup semantic dedup (operators/semantic.py): clustering
 correctness on separable data, tie/empty-cell edges, the keep-lowest
-dedup rule, determinism, and the zero-shuffle assignment plan."""
+dedup rule, NULL vectors, determinism, a pure-Python fold reference
+(random corpora and the real one), and the zero-shuffle assignment
+plan."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +18,54 @@ from pandasql_spark.operators.semantic import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _fold(xs):
+    """Left-to-right sum from 0.0: the q69 oracle's fold order."""
+    acc = 0.0
+    for x in xs:
+        acc += x
+    return acc
+
+
+def _py_semdedup(vecs, k, n_iter, tau):
+    """{id: (cid, kept)} for {id: vector}: Lloyd's k-means from the k
+    lowest-id vectors with 6-decimal centroids (empty cells keep their
+    centroid, distance ties to the lowest cid), then drop a row when a
+    lower-id row in its cell has round(cosine, 6) >= tau (cosine 0
+    against a zero vector). Every sum is a left-to-right fold."""
+
+    def assign(cents):
+        out = {}
+        for i, v in vecs.items():
+            dists = [_fold((a - b) * (a - b) for a, b in zip(v, c)) for c in cents]
+            out[i] = dists.index(min(dists))
+        return out
+
+    cents = [vecs[i] for i in sorted(vecs)[:k]]
+    for _ in range(n_iter):
+        cells = assign(cents)
+        for ci in range(k):
+            members = [vecs[i] for i in cells if cells[i] == ci]
+            if members:
+                cents[ci] = [
+                    round(_fold(m[d] for m in members) / len(members), 6)
+                    for d in range(len(members[0]))
+                ]
+    cells = assign(cents)
+    norms = {i: math.sqrt(_fold(x * x for x in v)) or 1.0 for i, v in vecs.items()}
+
+    def cos(i, j):
+        dot = _fold(x * y for x, y in zip(vecs[i], vecs[j]))
+        return round(dot / (norms[i] * norms[j]), 6)
+
+    ids = sorted(vecs)
+    return {
+        i: (cells[i], not any(
+            cells[j] == cells[i] and cos(i, j) >= tau for j in ids[:n]
+        ))
+        for n, i in enumerate(ids)
+    }
 
 
 def _vecs(spark, rows):
@@ -87,37 +139,39 @@ def test_planted_dups_dropped_on_real_corpus(spark):
     assert orig_dropped == 0
 
 
-def test_numpy_pair_stage_matches_expr_fold(spark):
-    # BLAS-order vs fold-order arithmetic, in BOTH the assignment and
-    # the pair stage: verdicts must agree on the full corpus incl.
+def test_corpus_matches_python_fold_reference(spark):
+    # BLAS-order arithmetic in the assignment and the pair stage vs a
+    # left-to-right fold: verdicts must agree on the full corpus incl.
     # planted exact dups
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     planted = e.filter(F.col("vec_id") % 50 == 0).withColumn(
         "vec_id", F.col("vec_id") + 100000
     )
     corpus = e.unionByName(planted)
-    a = sorted(map(tuple, semantic_dedup(
-        corpus, k=4, n_iter=2, tau=0.35, impl="numpy", assign_impl="numpy"
-    ).collect()))
-    b = sorted(map(tuple, semantic_dedup(
-        corpus, k=4, n_iter=2, tau=0.35, impl="expr", assign_impl="expr"
-    ).collect()))
-    assert a == b
+    got = {
+        r.vec_id: (r.cid, r.kept)
+        for r in semantic_dedup(corpus, k=4, n_iter=2, tau=0.35).collect()
+    }
+    vecs = {
+        r.vec_id: [float(x) for x in r.embedding]
+        for r in corpus.select("vec_id", "embedding").collect()
+    }
+    assert len(vecs) == 510
+    assert got == _py_semdedup(vecs, k=4, n_iter=2, tau=0.35)
 
 
 def test_zero_norm_vectors_never_dropped_either_impl(spark):
-    # cosine vs a zero vector is NaN in the fold (Spark orders NaN above
-    # every number) and defined-0 in numpy — both impls must KEEP
+    # cosine vs a zero vector is 0/0; the kernel defines it as 0, so
+    # zero vectors are KEPT
     df = _vecs(
         spark,
         [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
     )
-    for impl in ("numpy", "expr"):
-        out = {
-            r.vec_id: r.kept
-            for r in semantic_dedup(df, k=1, n_iter=0, tau=0.5, impl=impl).collect()
-        }
-        assert out == {0: True, 1: True, 2: True, 3: False}, impl
+    out = {
+        r.vec_id: r.kept
+        for r in semantic_dedup(df, k=1, n_iter=0, tau=0.5).collect()
+    }
+    assert out == {0: True, 1: True, 2: True, 3: False}
 
 
 def test_dedup_string_ids(spark):
@@ -137,11 +191,8 @@ def test_dedup_deterministic_across_runs(spark):
 
 
 def test_property_vs_python_bruteforce(spark):
-    """Full-pipeline differential on random small corpora: Python
-    re-implements init/assign/update/dedup with the same quantization
-    and tie rules; verdicts must match exactly."""
-    import math
-
+    """Full-pipeline differential on random small corpora against the
+    Python reference; verdicts must match exactly."""
     import numpy as np
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -170,45 +221,8 @@ def test_property_vs_python_bruteforce(spark):
     )
     def inner(data, k, tau):
         rows = [(i, list(v)) for i, v in enumerate(data)]
-        # Python oracle
         vecs = {i: [float(np.float32(x)) for x in v] for i, v in rows}
-        cents = [vecs[i] for i in sorted(vecs)[:k]]
-
-        def assign(c):
-            out = {}
-            for i, v in vecs.items():
-                dists = [sum((a - b) * (a - b) for a, b in zip(v, cc)) for cc in c]
-                out[i] = dists.index(min(dists))
-            return out
-
-        for _ in range(2):
-            a = assign(cents)
-            new = []
-            for ci in range(k):
-                members = [vecs[i] for i in a if a[i] == ci]
-                if members:
-                    new.append([
-                        round(sum(m[d] for m in members) / len(members), 6)
-                        for d in range(3)
-                    ])
-                else:
-                    new.append(cents[ci])
-            cents = new
-        a = assign(cents)
-
-        def cos(u, v):
-            nu = math.sqrt(sum(x * x for x in u)) or 1.0
-            nv = math.sqrt(sum(x * x for x in v)) or 1.0
-            return round(sum(x * y for x, y in zip(u, v)) / (nu * nv), 6)
-
-        expected = {}
-        for i in sorted(vecs):
-            dropped = any(
-                a[j] == a[i] and cos(vecs[i], vecs[j]) >= tau
-                for j in vecs if j < i
-            )
-            expected[i] = (a[i], not dropped)
-
+        expected = _py_semdedup(vecs, k=k, n_iter=2, tau=tau)
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         got = {
             r.vec_id: (r.cid, r.kept)
@@ -300,3 +314,39 @@ def test_plan_is_cached_failed_lookup_is_unknown():
         _jdf = None
 
     assert _plan_is_cached(_FakeDF()) is None
+
+
+def test_null_vectors_get_null_cid_and_are_kept(spark):
+    # NULL embeddings (parquet list columns are nullable) have no cell:
+    # they are skipped by the k-means init and updates, get cid NULL,
+    # and survive dedup
+    df = spark.createDataFrame(
+        [
+            (0, None),
+            (1, [0.0, 0.0]),
+            (2, [4.0, 0.0]),
+            (3, None),
+            (4, [4.0, 2.0]),
+            (5, [4.0, 0.0]),  # dup of 2 -> dropped
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    fixed = [[0.0, 0.0], [4.0, 0.0]]
+    cells = {r.vec_id: r.cid for r in assign_cells(df, fixed).collect()}
+    assert cells == {0: None, 1: 0, 2: 1, 3: None, 4: 1, 5: 1}
+    # NULL and non-NULL vectors in one Arrow batch
+    one_batch = assign_cells(df.coalesce(1), fixed).collect()
+    assert {r.vec_id: r.cid for r in one_batch} == cells
+    # init = the two lowest-id NON-NULL vectors (1 and 2); the update
+    # averages cell 1's members 2, 4, 5 only
+    assigned, cents = lloyd_kmeans(df, k=2, n_iter=1)
+    assert cents == [[0.0, 0.0], [4.0, 0.666667]]
+    assert {r.vec_id: r.cid for r in assigned.collect()} == cells
+    out = {
+        r.vec_id: (r.cid, r.kept)
+        for r in semantic_dedup(df, k=2, n_iter=1, tau=0.95).collect()
+    }
+    assert out == {
+        0: (None, True), 1: (0, True), 2: (1, True),
+        3: (None, True), 4: (1, True), 5: (1, False),
+    }
