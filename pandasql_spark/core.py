@@ -992,45 +992,31 @@ class DataFrame(BaseFrame):
             # itself and stay plainly addressable.
             la, ra = left.alias("__l"), right.alias("__r")
             joined = la.join(ra, on=keys, how=how)
-            left_nonkey = [c for c in left.columns if c not in keys]
-            right_extra = (
-                []
-                if existence
-                else [
-                    c
-                    for c in right.columns
-                    if c not in keys and c not in left.columns
-                ]
-            )
-            exprs = {k: F.col(k) for k in keys}
-            exprs.update({c: F.col(f"__l.{c}").alias(c) for c in left_nonkey})
-            exprs.update({c: F.col(f"__r.{c}").alias(c) for c in right_extra})
-            out_cols = sorted(exprs)
-            return DataFrame(sdf=joined.select(*[exprs[c] for c in out_cols]))
+            exprs = {k: _ident(k) for k in keys}
         elif left_on is not None and right_on is not None:
             lk = [left_on] if isinstance(left_on, str) else list(left_on)
             rk = [right_on] if isinstance(right_on, str) else list(right_on)
             if len(lk) != len(rk):
                 raise ValueError("left_on and right_on must have equal length")
-            r = right
             # Alias to avoid ambiguity when frames share lineage.
-            la, ra = left.alias("__l"), r.alias("__r")
+            la, ra = left.alias("__l"), right.alias("__r")
             cond = None
             for a, b in zip(lk, rk):
                 c = F.col(f"__l.{a}") == F.col(f"__r.{b}")
                 cond = c if cond is None else (cond & c)
             joined = la.join(ra, on=cond, how=how)
-            left_cols = left.columns
-            right_keep = (
-                [] if existence else [c for c in right.columns if c not in left_cols]
-            )
-            sel = [F.col(f"__l.{c}").alias(c) for c in left_cols]
-            sel += [F.col(f"__r.{c}").alias(c) for c in right_keep]
-            joined = joined.select(*sel)
-            out_cols = sorted(left_cols + right_keep)
+            exprs = {}
         else:
             raise ValueError("merge requires on= or left_on=/right_on=")
-        return DataFrame(sdf=joined.select(*out_cols))
+        for c in left.columns:
+            exprs.setdefault(c, f"{_ident('__l', c)} AS {_ident(c)}")
+        if not existence:
+            for c in right.columns:
+                exprs.setdefault(c, f"{_ident('__r', c)} AS {_ident(c)}")
+        # ONE projection, as SQL text: a Column built and aliased through
+        # py4j costs several JVM round trips per output column, and every
+        # further select re-analyzes the whole join plan
+        return DataFrame(sdf=joined.selectExpr(*[exprs[c] for c in sorted(exprs)]))
 
     def groupby(self, by: str | Sequence[str], as_index: bool = True) -> "GroupByDataFrame":
         from .groupby import GroupByDataFrame
@@ -1250,13 +1236,13 @@ def concat(frames: Sequence[DataFrame]) -> DataFrame:
     return DataFrame(sdf=out)
 
 
+def _ident(*parts: str) -> str:
+    """Backtick-quoted, dot-qualified SQL identifier."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
 def from_spark(sdf: SparkDataFrame) -> DataFrame:
     return DataFrame(sdf=sdf)
-
-
-def read_parquet(path: str, spark: SparkSession | None = None) -> DataFrame:
-    spark = spark or get_spark()
-    return DataFrame(sdf=spark.read.parquet(path))
 
 
 _OFFLOADING_STRATEGY = "ALWAYS"

@@ -229,11 +229,14 @@ def _decode_avi_native(b: bytes) -> tuple[float, np.ndarray]:
         walk_list(12, len(b))
         if w is None or h is None or not frames:
             raise VideoDecodeError("missing stream format or frames")
-        out = np.empty((len(frames), h, w, 3), np.uint8)
+        # the output is allocated only from frames checked against the
+        # header: a corrupt header size must not be able to ask for
+        # more memory than the payload carries
         if mjpg:
             from .imagecodec import ImageDecodeError
             from .jpegcodec import decode_jpeg
 
+            decoded = []
             for i, fr in enumerate(frames):
                 try:
                     px = decode_jpeg(bytes(fr))
@@ -248,12 +251,14 @@ def _decode_avi_native(b: bytes) -> tuple[float, np.ndarray]:
                     )
                 # JPEG frames are top-down by construction; grayscale
                 # broadcasts across RGB
-                out[i] = px if px.shape[2] == 3 else np.repeat(px, 3, axis=2)
-            return fps, out
+                decoded.append(px if px.shape[2] == 3 else np.repeat(px, 3, axis=2))
+            return fps, np.stack(decoded).astype(np.uint8, copy=False)
         stride = _row_stride(w)
         for i, fr in enumerate(frames):
             if len(fr) < stride * h:
                 raise VideoDecodeError(f"frame {i} truncated")
+        out = np.empty((len(frames), h, w, 3), np.uint8)
+        for i, fr in enumerate(frames):
             rows = np.frombuffer(fr, np.uint8, stride * h).reshape(h, stride)
             bgr = rows[:, : w * 3].reshape(h, w, 3)
             rgb = bgr[:, :, ::-1] if top_down else bgr[::-1, :, ::-1]

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 import pandasql_spark as ps
 from pandasql_spark.functions import similarity, text
 from pandasql_spark.session import ensure_semantics
+from pandasql_spark.sources.io import open_parquet
 
 from ._shared import QueryDef, _t, load_events
 from ._shared import _codec_corpus  # noqa: F401
@@ -305,7 +306,7 @@ def q14_agg_global(spark: SparkSession, sf: str) -> SparkDataFrame:
     plus conditional aggregation (SQL FILTER-clause pattern, formerly
     q56): returned-flag counts/revenue restricted inside the aggregate —
     one pass, no pre-filter join, still a single partial-agg shuffle."""
-    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    li = open_parquet(spark, f"{sf}/lineitem.parquet")
     ret = F.col("l_returnflag") == "R"
     return li.agg(
         F.round(F.sum("l_quantity"), 2).alias("total_qty"),
@@ -336,8 +337,8 @@ FROM lineitem
 def q15_window_topn(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Window function (beyond-reference; SURVEY §2.8 notes the reference
     has none): top-2 orders per market segment via row_number."""
-    o = spark.read.parquet(f"{sf}/orders.parquet")
-    c = spark.read.parquet(f"{sf}/customer.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
+    c = open_parquet(spark, f"{sf}/customer.parquet")
     j = o.join(c, o.o_custkey == c.c_custkey)
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -386,7 +387,7 @@ def q16_doc_profile(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.classifier import score_column, sigmoid
     from pandasql_spark.operators.lm import perplexity_buckets
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     clf = score_column("text", n_buckets=1 << 18, seed=0, bias=0.0)
     # perplexity_buckets carries (doc_id, text, lang) through, so the
     # profile projection rides ITS output — no second documents scan
@@ -501,7 +502,7 @@ def q19_dedup_exact(spark: SparkSession, sf: str) -> SparkDataFrame:
     canonical exact-dedup plan at any scale (functions/text.py:fingerprint)."""
     from pandasql_spark.operators.dedup import exact_dedup
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     return exact_dedup(d).withColumnRenamed("first_id", "first_doc_id")
 
 
@@ -519,7 +520,7 @@ FROM documents GROUP BY 1
 def q20_cosine_topk(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Brute-force cosine top-20 vs vec_id=0 (functions/similarity.py).
     Broadcast query row + distributed scan + TakeOrderedAndProject."""
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = open_parquet(spark, f"{sf}/embeddings.parquet")
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
@@ -551,7 +552,7 @@ def q22_ngram_jaccard(spark: SparkSession, sf: str) -> SparkDataFrame:
     shingles pruned by max_shingle_freq at scale)."""
     from pandasql_spark.operators.dedup import ngram_jaccard_pairs
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     # max_shingle_freq is the 100 TB knob; the oracle doesn't model
     # pruning, so the GATED form disables it (inactive at gate SFs
     # anyway — no shingle nears the default 10k document frequency)
@@ -717,7 +718,7 @@ def q25_embedding_topk_pairs(spark: SparkSession, sf: str) -> SparkDataFrame:
     vacuous; top-k pairs gives a non-empty, oracle-checkable answer."""
     from pandasql_spark.functions.similarity import cosine_topk_pairs
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = open_parquet(spark, f"{sf}/embeddings.parquet")
     return cosine_topk_pairs(e, k=50)
 
 
@@ -762,7 +763,7 @@ def q10_embedding_neardup(spark: SparkSession, sf: str) -> SparkDataFrame:
         embedding_neardup_pairs,
     )
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet").select(
+    e = open_parquet(spark, f"{sf}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     planted = e.select(
@@ -1021,12 +1022,12 @@ def q48_write_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
 
     from pandasql_spark.sources.io import write_compacted
 
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").filter(
+    li = open_parquet(spark, f"{sf}/lineitem.parquet").filter(
         F.col("l_shipdate") <= "1995-12-31"
     ).select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
     out_dir = tempfile.mkdtemp(prefix="q48_roundtrip_") + "/part"
     write_compacted(li, out_dir, target_file_mb=64)
-    back = spark.read.parquet(out_dir)
+    back = open_parquet(spark, out_dir)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("l_quantity").cast("double").alias("sum_qty"),
@@ -1126,7 +1127,7 @@ def q59_stream_sink_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
         )
         q.awaitTermination()
 
-    back = spark.read.parquet(out)
+    back = open_parquet(spark, out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("event_id").alias("n_distinct_ids"),
@@ -1157,14 +1158,14 @@ def q60_zorder_pruned_scan(spark: SparkSession, sf: str) -> SparkDataFrame:
 
     from pandasql_spark.operators.zorder import write_zordered
 
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
+    li = open_parquet(spark, f"{sf}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
     )
     ok_max = li.agg(F.max("l_orderkey")).first()[0]
     pk_max = li.agg(F.max("l_partkey")).first()[0]
     out = tempfile.mkdtemp(prefix="q60_z_") + "/t"
     write_zordered(li, out, ["l_orderkey", "l_partkey"], num_files=16)
-    back = spark.read.parquet(out)
+    back = open_parquet(spark, out)
     box = back.filter(
         (F.col("l_orderkey") <= int(ok_max * 0.2))
         & (F.col("l_partkey") <= int(pk_max * 0.2))
@@ -1211,7 +1212,7 @@ def q61_stratified_sample(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.sampling import stratified_sample_exact
     from pandasql_spark.streaming.sample import replay_priority_sample
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
+    docs = open_parquet(spark, f"{sf}/documents.parquet").select(
         "doc_id", "lang", "n_chars"
     )
     samp = stratified_sample_exact(docs, "lang", 40, "doc_id")
@@ -1323,7 +1324,7 @@ def q62_heavy_hitters(spark: SparkSession, sf: str) -> SparkDataFrame:
     threshold = 0.01
     capacity = max(100, math.ceil(1 / threshold))
     path = f"{sf}/documents.parquet"
-    docs = spark.read.parquet(path)
+    docs = open_parquet(spark, path)
     toks = docs.select(F.explode(tokens("text")).alias("token"))
     b_vals, n_b = mg_candidate_counts(toks, "token", capacity=capacity)
     cands = replay_mg_candidates(
@@ -1434,7 +1435,7 @@ def q64_sequence_packing(spark: SparkSession, sf: str) -> SparkDataFrame:
     value-checked end to end (the r11 IOU on pack_bpe_corpus)."""
     from pandasql_spark.operators.packing import pack_bpe_corpus, pack_chunks
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     docs = d.select("doc_id", F.size(F.split("text", " ")).alias("n_tokens"))
     ws = pack_chunks(docs, 512).select(
         "doc_id", "chunk_id", "piece_start", "piece_end", "chunk_pos",
@@ -1550,7 +1551,7 @@ def q65_exact_percentiles(spark: SparkSession, sf: str) -> SparkDataFrame:
     in DuckDB."""
     from pandasql_spark.operators.ranking import exact_percentiles
 
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     return exact_percentiles(
         o, "o_totalprice", [0.01, 0.25, 0.5, 0.75, 0.95, 0.99], tiebreak="o_orderkey"
     )
@@ -1603,7 +1604,7 @@ def q66_contamination(spark: SparkSession, sf: str) -> SparkDataFrame:
         fuzzy_contaminated_docs,
     )
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     ev = docs.filter(F.col("doc_id") % 50 == 0)
     tr = docs.filter(F.col("doc_id") % 50 != 0)
     ngram = contaminated_docs(tr, ev, n=3, hashed=False, prefilter="bloom")
@@ -1693,7 +1694,7 @@ def q67_repetition_signals(spark: SparkSession, sf: str) -> SparkDataFrame:
     oracle's explode+groupBy shape cross-checks it."""
     from pandasql_spark.operators.repetition import repetition_signals
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return repetition_signals(docs, n=2)
 
 
@@ -1733,7 +1734,7 @@ def q68_pii_redaction(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.functions.pii import pii_count, redact_pii
     from pandasql_spark.functions import pii
 
-    c = spark.read.parquet(f"{sf}/customer.parquet")
+    c = open_parquet(spark, f"{sf}/customer.parquet")
     key = F.col("c_custkey")
     text = F.concat_ws(
         " ",
@@ -1812,7 +1813,7 @@ def q69_semantic_dedup(spark: SparkSession, sf: str) -> SparkDataFrame:
     # persist: the Arrow assignment kernel is opaque to Catalyst, so
     # without this the unused `label` column rides through the scan,
     # the cache and every Lloyd pass (r17 ReadSchema audit)
-    e = spark.read.parquet(f"{sf}/embeddings.parquet").select(
+    e = open_parquet(spark, f"{sf}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     planted = e.filter(F.col("vec_id") % 100 == 0).withColumn(
@@ -1940,7 +1941,7 @@ def q70_mixture_resample(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.dsir import dsir_select
     from pandasql_spark.operators.sampling import resample_to_mixture
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     out = resample_to_mixture(
         docs,
         stratum_col="lang",
@@ -2068,7 +2069,7 @@ def q71_curation_pipeline(spark: SparkSession, sf: str) -> SparkDataFrame:
 
     b = np.arange(4096, dtype=np.int64)
     w = ((b + 7) * 2654435761 % 2048 - 1024) / 1024.0
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     ev = docs.filter(F.col("doc_id") % 50 == 0)
     tr = docs.filter(F.col("doc_id") % 50 != 0)
     out = curate_corpus(
@@ -2188,7 +2189,7 @@ def q72_unigram_logprob(spark: SparkSession, sf: str) -> SparkDataFrame:
     cross-engine after round-to-6."""
     from pandasql_spark.operators.lm import unigram_logprob_scores
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return unigram_logprob_scores(docs)
 
 
@@ -2214,7 +2215,7 @@ def q73_corpus_report(spark: SparkSession, sf: str) -> SparkDataFrame:
     oracle recomputes every metric in SQL."""
     from pandasql_spark.operators.report import corpus_report
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return corpus_report(docs, stratum_col="lang")
 
 
@@ -2259,7 +2260,7 @@ def q74_kmv_distinct(spark: SparkSession, sf: str) -> SparkDataFrame:
     the estimate itself."""
     from pandasql_spark.operators.sketch import kmv_distinct_estimate
 
-    orders = spark.read.parquet(f"{sf}/orders.parquet")
+    orders = open_parquet(spark, f"{sf}/orders.parquet")
     return kmv_distinct_estimate(orders, "o_custkey", k=256)
 
 
@@ -2297,8 +2298,8 @@ def q75_kmv_set_overlap(spark: SparkSession, sf: str) -> SparkDataFrame:
     SQL oracle."""
     from pandasql_spark.operators.sketch import kmv_set_relations
 
-    orders = spark.read.parquet(f"{sf}/orders.parquet")
-    cust = spark.read.parquet(f"{sf}/customer.parquet")
+    orders = open_parquet(spark, f"{sf}/orders.parquet")
+    cust = open_parquet(spark, f"{sf}/customer.parquet")
     return kmv_set_relations(orders, "o_custkey", cust, "c_custkey", k=256)
 
 

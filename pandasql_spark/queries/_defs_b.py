@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 import pandasql_spark as ps
 from pandasql_spark.functions import similarity, text
 from pandasql_spark.session import ensure_semantics
+from pandasql_spark.sources.io import open_parquet
 
 from ._shared import QueryDef, _t, load_events
 from ._shared import _codec_corpus  # noqa: F401
@@ -180,7 +181,7 @@ def q31_rollup(spark: SparkSession, sf: str) -> SparkDataFrame:
     """ROLLUP grouping sets (absent from the reference, SURVEY §2.5):
     order totals by (status, priority) with subtotals and grand total.
     One shuffle; Spark expands grouping sets map-side."""
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     return (
         o.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -332,9 +333,9 @@ def q35_shipping_priority(spark: SparkSession, sf: str) -> SparkDataFrame:
     """TPC-H Q3 (adapted; no shippriority column): top-10 unshipped
     orders by revenue. Dim filter pushes to the customer scan; AQE
     broadcasts filtered customer; final top-k is TakeOrderedAndProject."""
-    c = spark.read.parquet(f"{sf}/customer.parquet")
-    o = spark.read.parquet(f"{sf}/orders.parquet")
-    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    c = open_parquet(spark, f"{sf}/customer.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
+    li = open_parquet(spark, f"{sf}/lineitem.parquet")
     cutoff = "1997-06-30"
     j = (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -371,7 +372,7 @@ def q36_array_dims(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Array-column analytics (no array types exist in the reference,
     SURVEY §1.2): per-dimension stats over the first 8 embedding dims
     via posexplode — stays in whole-stage codegen, no UDF."""
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = open_parquet(spark, f"{sf}/embeddings.parquet")
     ex = e.select(
         F.posexplode(F.slice(F.col("embedding").cast("array<double>"), 1, 8)).alias(
             "pos", "v"
@@ -401,7 +402,7 @@ def q37_string_funcs(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Scalar string transforms (reference's .str has only 3 predicates,
     core.py:479-494 — no transforms at all): upper/substr/length/concat,
     all JVM-side codegen'd expressions."""
-    c = spark.read.parquet(f"{sf}/customer.parquet")
+    c = open_parquet(spark, f"{sf}/customer.parquet")
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -425,7 +426,7 @@ def q38_pivot(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Pivot / crosstab (absent from the reference): order totals by
     priority × status. Explicit pivot values skip the extra
     distinct-discovery job and keep one shuffle."""
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     p = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -453,7 +454,7 @@ def q39_winnowing(spark: SparkSession, sf: str) -> SparkDataFrame:
     winnowing_fingerprints, Schleimer et al. SIGMOD'03): per-doc
     fingerprint-set size and lexicographic min fingerprint. All
     JVM-side array expressions — no UDF, no shuffle."""
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     fps = text.winnowing_fingerprints("text", k=3, w=4)
     return d.select(
         "doc_id",
@@ -501,7 +502,7 @@ def q40_ann_ivf(spark: SparkSession, sf: str) -> SparkDataFrame:
     # PROBE path, not index construction. Deterministic: seeded build.
     cached = _IVF_CACHE.get(sf)
     if cached is None:
-        e = spark.read.parquet(f"{sf}/embeddings.parquet")
+        e = open_parquet(spark, f"{sf}/embeddings.parquet")
         idx = build_ivf_index(e, nlist=8, seed=42, max_iter=3)
         idx.indexed = idx.indexed.localCheckpoint()
         qv = e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
@@ -756,7 +757,7 @@ def q43_decorrelated_scalar(spark: SparkSession, sf: str) -> SparkDataFrame:
     de-correlated: parts priced >1.01× their type's average (the synthetic prices cluster within ~6%% of the type mean, so 1.01 is a selective-but-non-empty cut at every SF). The oracle is
     the literal correlated subquery; ours is the window-average plan —
     one shuffle on p_type instead of one subquery execution per row."""
-    p = spark.read.parquet(f"{sf}/part.parquet")
+    p = open_parquet(spark, f"{sf}/part.parquet")
     w = Window.partitionBy("p_type")
     avg_p = F.avg("p_retailprice").over(w)
     return (
@@ -926,7 +927,7 @@ def q49_dedup_clusters(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.cluster import connected_components
     from pandasql_spark.operators.dedup import ngram_jaccard_pairs
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     pairs = ngram_jaccard_pairs(d, threshold=0.5, max_shingle_freq=None)
     comp = connected_components(pairs)
     return comp.select(
@@ -995,7 +996,7 @@ def q50_jaccard_verified(spark: SparkSession, sf: str) -> SparkDataFrame:
 
     from pandasql_spark.operators.cache import attach_cleanup
 
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     # DELIBERATE double pipeline (adjudicated r16): the pairs stage
     # shingles/signs/verifies the full corpus and dedup_corpus repeats
     # those stages over the exact survivors. Deriving the survivor
@@ -1077,7 +1078,7 @@ def q51_tfidf(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Per-doc top-3 TF-IDF keywords (functions/text.py:tfidf_top_terms):
     token explode → TF → DF → smooth-idf → per-doc window top-k, ties
     broken lexicographically. Natural-log idf matches DuckDB ln()."""
-    d = spark.read.parquet(f"{sf}/documents.parquet")
+    d = open_parquet(spark, f"{sf}/documents.parquet")
     out = text.tfidf_top_terms(d, "text", "doc_id", k=3)
     return out.select(
         F.col("id").cast("long").alias("doc_id"),
@@ -1126,7 +1127,7 @@ def q52_distribution(spark: SparkSession, sf: str) -> SparkDataFrame:
     result is bit-identical to SQL NTILE."""
     from pandasql_spark.operators.ranking import exact_ntile
 
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     lo, hi = 0.0, 600000.0  # fixed range keeps the histogram one-pass
     deciled = exact_ntile(
         o.select("o_totalprice", "o_orderkey"),
@@ -1193,7 +1194,7 @@ def q54_fuzzy_match(spark: SparkSession, sf: str) -> SparkDataFrame:
     the threshold win); the broadcast hint assumes matched name pairs
     stay driver-small, which Σ(distinct-per-block)² governs — drop the
     hint and let AQE decide if blocks are high-cardinality."""
-    p = spark.read.parquet(f"{sf}/part.parquet").select(
+    p = open_parquet(spark, f"{sf}/part.parquet").select(
         "p_partkey", "p_name", F.substring("p_name", 1, 6).alias("blk")
     )
     names = p.select("p_name", "blk").distinct()
@@ -1239,7 +1240,7 @@ def q57_moving_avg(spark: SparkSession, sf: str) -> SparkDataFrame:
     the average of their orders in the trailing 30 days (inclusive).
     A range frame on event time — unlike a rows frame — is
     data-density-independent, the correct moving-metric shape."""
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     # TIMESTAMP_NTZ → TIMESTAMP (session tz pinned to UTC) → epoch
     # seconds; order dates are whole midnights so second granularity is
     # exact and matches the oracle's INTERVAL arithmetic

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 import pandasql_spark as ps
 from pandasql_spark.functions import similarity, text
 from pandasql_spark.session import ensure_semantics
+from pandasql_spark.sources.io import open_parquet
 
 from ._shared import QueryDef, _t, load_events
 
@@ -69,7 +70,7 @@ def q77_source_caps(spark: SparkSession, sf: str) -> SparkDataFrame:
       driver's gate."""
     from pandasql_spark.operators.caps import cap_per_group, cap_tokens_per_group
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     order = [("n_chars", False), ("doc_id", True)]
     capped = cap_per_group(docs, keys=["source"], order_by=order, n=10)
     toked = cap_tokens_per_group(
@@ -128,7 +129,7 @@ def q78_sampled_quantiles(spark: SparkSession, sf: str) -> SparkDataFrame:
     in SQL, so the gate checks both pieces bit-for-bit."""
     from pandasql_spark.operators.sketch import hash_sampled_quantiles
 
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     return hash_sampled_quantiles(
         o,
         value_col="o_totalprice",
@@ -172,7 +173,7 @@ def q79_snapshot_diff(spark: SparkSession, sf: str) -> SparkDataFrame:
     fingerprint join in SQL."""
     from pandasql_spark.operators.delta import snapshot_diff
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     new = (
         docs.filter(F.col("doc_id") % 17 != 3)
         .withColumn(
@@ -274,7 +275,7 @@ def q80_audio(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.dedup import audio_fingerprint
     from pandasql_spark.operators.multimodal import audio_frame_rms, audio_meta
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
 
     def render(it):
         import numpy as np
@@ -386,7 +387,7 @@ def q81_audio_report(spark: SparkSession, sf: str) -> SparkDataFrame:
     parameters)."""
     from pandasql_spark.operators.report import corpus_report
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = open_parquet(spark, f"{sf}/documents.parquet").select(
         "doc_id", "text", "source"
     )
 
@@ -500,7 +501,7 @@ def q82_bm25_topk(spark: SparkSession, sf: str) -> SparkDataFrame:
     beyond-reference sparse-search path next to the dense one (q20/q40)."""
     from pandasql_spark.operators.retrieval import bm25_topk
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     out = bm25_topk(d, ["vector", "hash", "join"], k=20)
     return out.select("doc_id", "hit_terms", "bm25")
 
@@ -551,7 +552,7 @@ def q83_scd2_merge(spark: SparkSession, sf: str) -> SparkDataFrame:
     the version chain, content-addressed."""
     from pandasql_spark.operators.delta import scd2_merge
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     hist = docs.select("doc_id", "text", "lang").select(
         "*",
         F.lit(0).cast("long").alias("valid_from"),
@@ -637,7 +638,7 @@ def q84_hash_split(spark: SparkSession, sf: str) -> SparkDataFrame:
     so the per-row assignment hash-matches, not just the counts."""
     from pandasql_spark.operators.sampling import hash_split
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id")
     out = hash_split(d, {"train": 0.9, "val": 0.05, "test": 0.05}, "doc_id")
     return out.select("doc_id", "split")
 
@@ -673,7 +674,7 @@ def q85_chunking(spark: SparkSession, sf: str) -> SparkDataFrame:
     actual chunk CONTENT, not just the span arithmetic."""
     from pandasql_spark.operators.packing import chunk_documents
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     out = chunk_documents(d, 64, overlap=16)
     return out.select(
         "doc_id", "chunk_idx", "start_tok", "end_tok",
@@ -805,7 +806,7 @@ def q87_ann_join(spark: SparkSession, sf: str) -> SparkDataFrame:
     to 6 only at output."""
     from pandasql_spark.operators.ann import ann_join, build_ivf_index
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = open_parquet(spark, f"{sf}/embeddings.parquet")
     # share q40's build-once index cache (same seeded build; cell
     # placement cancels out of the full-probe result anyway) so bench
     # reruns time the JOIN path, not KMeans construction
@@ -877,7 +878,7 @@ def q88_line_dedup(spark: SparkSession, sf: str) -> SparkDataFrame:
     gate exercise the scale path, the q66-bloom precedent."""
     from pandasql_spark.operators.dedup import line_dedup, substring_dedup
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     toks = F.split(F.col("text"), " ")
     n_lines = F.floor((F.size(toks) + 7) / F.lit(8)).cast("int")
     line_arr = F.transform(
@@ -999,7 +1000,7 @@ def q89_quantize(spark: SparkSession, sf: str) -> SparkDataFrame:
     hash-matches the COMPRESSED REPRESENTATION, not just stats."""
     from pandasql_spark.operators.quantize import quantization_report
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = open_parquet(spark, f"{sf}/embeddings.parquet")
     return quantization_report(e)
 
 
@@ -1142,7 +1143,7 @@ def q91_quantile_normalize(spark: SparkSession, sf: str) -> SparkDataFrame:
     both engines (small-int division)."""
     from pandasql_spark.operators.ranking import quantile_normalize
 
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = open_parquet(spark, f"{sf}/orders.parquet")
     out = quantile_normalize(o, "o_totalprice", ["o_orderpriority"], k=20)
     return out.select("o_orderkey", "o_orderpriority", "pct")
 
@@ -1182,7 +1183,7 @@ def q92_html_extract(spark: SparkSession, sf: str) -> SparkDataFrame:
     decode, and whitespace collapse all agree."""
     from pandasql_spark.functions.html import html_title, html_to_text
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     page = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id").cast("string"),
@@ -1254,7 +1255,7 @@ def q93_url_normalize(spark: SparkSession, sf: str) -> SparkDataFrame:
     covered by unit tests; here every axis is exercised corpus-wide)."""
     from pandasql_spark.functions.url import url_host, url_normalize
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id")
     raw = F.concat(
         F.lit("HTTP://Site"),
         (F.col("doc_id") % 7).cast("string"),
@@ -1309,7 +1310,7 @@ def q94_crawl_pipeline(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.functions.text import normalize_unicode
     from pandasql_spark.operators.crawl import crawl_to_corpus
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     page = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id").cast("string"),
@@ -1401,7 +1402,7 @@ def q95_export_shards(spark: SparkSession, sf: str) -> SparkDataFrame:
     order) is pinned by test_shards.py round-trips."""
     from pandasql_spark.operators.shards import assign_shards, shard_manifest
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return shard_manifest(assign_shards(docs, 8, "doc_id"), ["text", "lang"])
 
 
@@ -1747,7 +1748,7 @@ def q97_stream_admission(spark: SparkSession, sf: str) -> SparkDataFrame:
             "q97_admission_replay",
             files_per_trigger=None,
         )
-        total = spark.read.parquet(path).agg(F.sum("value")).first()[0]
+        total = open_parquet(spark, path).agg(F.sum("value")).first()[0]
         budget = float(round(total / 10))
         tokens = replay_staged(
             spark,
@@ -1799,7 +1800,7 @@ def q98_bigram_lm(spark: SparkSession, sf: str) -> SparkDataFrame:
     recipe)."""
     from pandasql_spark.operators.lm import bigram_logprob_scores
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return bigram_logprob_scores(docs)
 
 
@@ -1840,7 +1841,7 @@ def q99_crawl_ingest_stream(spark: SparkSession, sf: str) -> SparkDataFrame:
     Eleventh gate-checked streaming surface."""
     from pandasql_spark.streaming.crawl_ingest import replay_crawl_ingest
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = open_parquet(spark, f"{sf}/documents.parquet").select("doc_id", "text")
     page = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id").cast("string"),
@@ -1916,7 +1917,7 @@ def q100_bpe_pair_stats(spark: SparkSession, sf: str) -> SparkDataFrame:
     is."""
     from pandasql_spark.operators.bpe import pair_stats
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = open_parquet(spark, f"{sf}/documents.parquet")
     return pair_stats(docs, "text", k=50)
 
 

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 import pandasql_spark as ps
 from pandasql_spark.functions import similarity, text
 from pandasql_spark.session import ensure_semantics
+from pandasql_spark.sources.io import open_parquet
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -40,7 +41,7 @@ def _with_semantics(
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> ps.DataFrame:
-    return ps.DataFrame(sdf=spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return ps.DataFrame(sdf=open_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> SparkDataFrame:
@@ -59,14 +60,14 @@ def load_events(spark: SparkSession, sf_dir: str) -> SparkDataFrame:
     """
     ensure_semantics(spark)
     try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = open_parquet(spark, f"{sf_dir}/events.parquet")
     except Exception as exc:  # TIMESTAMP(NANOS) file: legacy long-read path
         if "nanos" not in str(exc).lower():
             raise  # missing file / genuine failure — don't mask it
         prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+            ev = open_parquet(spark, f"{sf_dir}/events.parquet")
         finally:
             if prev is None:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
@@ -97,7 +98,7 @@ def _codec_corpus(spark: SparkSession, sf: str, *cols: str) -> SparkDataFrame:
     shuffle of the text column dominates (q80 WAV 0.91 -> 1.47 s, q81
     2.96 -> 5.12 s), so the audio gates keep the direct scan."""
     return (
-        spark.read.parquet(f"{sf}/documents.parquet")
+        open_parquet(spark, f"{sf}/documents.parquet")
         .select(*cols)
         .repartition(spark.sparkContext.defaultParallelism)
     )

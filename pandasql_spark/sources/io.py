@@ -3,9 +3,12 @@
 Every reader returns a lazy :class:`pandasql_spark.core.DataFrame`.
 
 Scale notes: ``read_csv``/``read_json``/``read_parquet`` are distributed
-Spark scans — partitioned, predicate-pushdown-capable (parquet), schema
-inferred by sampling (the reference's 1,000-row sample at
-``memory_utils.py:15-35`` is the same idea, single-node). ``read_pickle``
+Spark scans — partitioned, predicate-pushdown-capable (parquet). CSV and
+JSON schemas are inferred by sampling (the reference's 1,000-row sample
+at ``memory_utils.py:15-35`` is the same idea, single-node). A parquet
+schema is read from the file footers by a Spark job; `open_parquet` —
+the one place in the library that opens a parquet table — runs that job
+once per file identity per process and reuses the result. ``read_pickle``
 and ``read_numpy`` are driver-side by nature (pickle is not splittable);
 they parallelize the resulting frame out to executors and are only meant
 for small inputs — matching the reference, where they are thin
@@ -14,10 +17,15 @@ for small inputs — matching the reference, where they are thin
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from typing import Any
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from ..core import DataFrame
 from ..session import get_spark
@@ -60,10 +68,93 @@ def read_json(path: str, name: str | None = None, spark: SparkSession | None = N
     return df
 
 
+#: Inferred schemas kept by `open_parquet`, least recently used evicted
+#: first. One entry per (file identity, parquet confs); a StructType is
+#: a few KB at most.
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _file_identity(spark: SparkSession, path: str) -> tuple | None:
+    """(qualified path, length, mtime in ms) of the single file at
+    ``path`` from its Hadoop ``FileStatus`` — any filesystem — or None
+    for a directory, a glob or a path that does not resolve."""
+    jvm = spark._jvm
+    try:
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+        status = fs.getFileStatus(hpath)
+    except Py4JJavaError:
+        return None
+    if not status.isFile():
+        return None
+    return (status.getPath().toString(), status.getLen(), status.getModificationTime())
+
+
+def _parquet_confs(spark: SparkSession) -> tuple:
+    """The session's explicitly set confs that change how parquet types
+    map to Spark types (``spark.sql.parquet.*``,
+    ``spark.sql.legacy.parquet.*``, ``spark.sql.caseSensitive``); unset
+    ones hold their process-wide defaults. The keys cross py4j as one
+    string, not one round trip per entry; only matching keys' values
+    are fetched."""
+    jconf = spark.conf._jconf
+    keys = jconf.getAll().keys().mkString("\n").split("\n")
+    return tuple(sorted(
+        (k, jconf.get(k))
+        for k in keys
+        if k.startswith(("spark.sql.parquet.", "spark.sql.legacy.parquet."))
+        or k == "spark.sql.caseSensitive"
+    ))
+
+
+def open_parquet(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> SparkDataFrame:
+    """Open a parquet table: the one parquet read in the library.
+
+    With ``schema``, read with it (no inference). Without, Spark infers
+    the schema from the file footers, which costs one Spark job per
+    read. For a path that is a single file, the inferred StructType is
+    memoized process-wide, keyed by the qualified path, the file's
+    length and modification time (Hadoop ``FileStatus``), and the
+    session's parquet type-mapping confs; a hit returns
+    ``spark.read.schema(memo).parquet(path)`` — a new relation with a
+    fresh file listing and fresh attribute ids (a self-join of two reads
+    resolves), built without the job. Directories and globs (whose
+    listing can change), missing paths and failed inferences behave as a
+    plain ``spark.read.parquet``; only successful inferences are stored.
+
+    Limit: the identity is (length, millisecond mtime), so a rewrite at
+    the same path that keeps both is not detected and reads with the old
+    schema."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    ident = _file_identity(spark, path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (ident, _parquet_confs(spark))
+    with _schema_memo_lock:
+        memo = _schema_memo.get(key)
+        if memo is not None:
+            _schema_memo.move_to_end(key)
+    if memo is not None:
+        return spark.read.schema(memo).parquet(path)
+    sdf = spark.read.parquet(path)
+    inferred = sdf.schema
+    with _schema_memo_lock:
+        _schema_memo[key] = inferred
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+    return sdf
+
+
 def read_parquet(path: str, spark: SparkSession | None = None) -> DataFrame:
-    """Parquet → DataFrame (beyond-reference; the scale-native format)."""
-    spark = spark or get_spark()
-    return DataFrame(sdf=spark.read.parquet(path))
+    """Parquet → DataFrame (beyond-reference; the scale-native format),
+    opened by `open_parquet`."""
+    return DataFrame(sdf=open_parquet(spark or get_spark(), path))
 
 
 def read_pickle(path: str, spark: SparkSession | None = None) -> DataFrame:

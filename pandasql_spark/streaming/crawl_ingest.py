@@ -44,9 +44,10 @@ from pyspark.sql import functions as F
 
 from ..functions.url import url_host
 from ..operators.crawl import extract_crawl_columns
+from ..sources.io import open_parquet
 from .admission import admit_per_key_stream
 from .events import bounded_replay_shuffle
-from .incremental import _read_or_empty
+from .incremental import _read_or_empty, keep_active_session
 
 CRAWL_SCHEMA = "doc_id long, url string, html string"
 #: extract_crawl_columns' output (the corpus sink's data columns)
@@ -158,7 +159,7 @@ def crawl_ingest_stream(
     # append, matching admit_per_key_stream's applyInPandasWithState
     # contract — Spark rejects that operator under Update output mode
     writer = (
-        admitted.writeStream.foreachBatch(_process)
+        admitted.writeStream.foreachBatch(keep_active_session(_process))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -224,6 +225,6 @@ def replay_crawl_ingest(
     # legitimate outcome. With no partition dirs there is also no
     # batch_id column, so the drop must tolerate its absence (it does —
     # drop of a missing column is a no-op).
-    return spark.read.schema(CORPUS_SCHEMA).parquet(
-        os.path.join(work, "corpus")
+    return open_parquet(
+        spark, os.path.join(work, "corpus"), schema=CORPUS_SCHEMA
     ).drop("batch_id")

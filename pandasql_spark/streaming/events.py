@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.io import open_parquet
+
 
 @contextmanager
 def bounded_replay_shuffle(spark: SparkSession, n: int = 8):
@@ -464,7 +466,7 @@ def stage_time_ordered(
     import tempfile
 
     stage = tempfile.mkdtemp(prefix="evchunks_")
-    ev = spark.read.parquet(events_path)
+    ev = open_parquet(spark, events_path)
     stage_ordered_chunks(ev, n_batches, ["ts", "event_id"], stage)
     return stage
 
@@ -556,7 +558,7 @@ def _replay(spark, events_path, build_agg, query_name, output_mode="complete") -
         events_path = symlink_stage
 
     try:
-        spark.read.parquet(events_path).schema
+        open_parquet(spark, events_path).schema
         nanos = False
     except Exception as exc:  # TIMESTAMP(NANOS): vectorized reader rejects it
         if "nanos" not in str(exc).lower():

@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.io import open_parquet
+
 _OUT_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.LongType()),
@@ -198,7 +200,7 @@ def replay_mg_candidates(
 
     from .events import bounded_replay_shuffle, stage_ordered_chunks
 
-    docs = spark.read.parquet(docs_path).select(id_col, text_col)
+    docs = open_parquet(spark, docs_path).select(id_col, text_col)
     stage = tempfile.mkdtemp(prefix="hhchunks_")
     try:
         stage_ordered_chunks(docs, n_batches, [id_col], stage)

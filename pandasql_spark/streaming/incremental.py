@@ -58,6 +58,7 @@ from pandasql_spark.operators.dedup import (
     minhash_signatures,
     signature_est_jaccard,
 )
+from pandasql_spark.sources.io import open_parquet
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -116,13 +117,32 @@ def _check_store_fp_method(store_dir: str, fingerprint: str) -> None:
     os.replace(marker + ".tmp", marker)
 
 
+def keep_active_session(fn):
+    """Wrap a ``foreachBatch`` function so the caller's active session
+    (active when this is called) is active again when each micro-batch
+    returns. PySpark hands the function a Python wrapper around the
+    batch's CLONED session, and a ``createDataFrame`` on that wrapper
+    makes the clone the process-wide active session; later
+    `get_spark()` callers (a named view from ``read_csv``, say) would
+    then land on the clone."""
+    caller = SparkSession.getActiveSession()
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        try:
+            fn(batch, batch_id)
+        finally:
+            SparkSession._activeSession = caller
+
+    return run
+
+
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a store table, or an empty frame before the first batch.
     ``schema`` covers the data columns; the ``batch_id`` partition
     column is appended by partition discovery on the real read, so the
     empty frame appends it too."""
     if os.path.isdir(path):
-        return spark.read.schema(schema).parquet(path)
+        return open_parquet(spark, path, schema=schema)
     return spark.createDataFrame([], schema=schema + ", batch_id int")
 
 
@@ -301,9 +321,9 @@ def incremental_neardup_dedup(
             max_bucket_size=max_bucket_size,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    writer = docs_stream.writeStream.foreachBatch(
+        keep_active_session(_process)
+    ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -327,7 +347,7 @@ def replay_incremental_dedup(
 
     work = tempfile.mkdtemp(prefix="inc_dedup_")
     stage = os.path.join(work, "stage")
-    docs = spark.read.parquet(documents_path).select("doc_id", "text")
+    docs = open_parquet(spark, documents_path).select("doc_id", "text")
     # ntile over doc_id order → equal-size, id-ordered chunks, staged
     # as one single-file parquet per chunk with ascending mtimes in ONE
     # chunk-partitioned write (events.stage_ordered_chunks)
@@ -355,8 +375,8 @@ def replay_incremental_dedup(
     # explicit schema (a subset projection is valid against parquet):
     # an all-duplicates corpus leaves zero part files, which schema
     # inference rejects while an empty survivor set is legitimate
-    return spark.read.schema("doc_id long").parquet(
-        os.path.join(work, "survivors")
+    return open_parquet(
+        spark, os.path.join(work, "survivors"), schema="doc_id long"
     ).select("doc_id")
 
 
@@ -614,12 +634,12 @@ def compact_substring_store(
     if not ids:
         return 0
     target = ids[-1]
-    store = spark.read.parquet(path)
+    store = open_parquet(spark, path)
     if min_batch_id is not None:
         store = store.filter(F.col("batch_id") >= F.lit(min_batch_id))
     shutil.rmtree(tmp, ignore_errors=True)
     store.select("fp").distinct().write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    n = open_parquet(spark, tmp).count()
     # atomic marker: a crash mid-write must never leave a partial file
     # that wedges recovery — write aside, fsync, rename into place
     with open(marker + ".tmp", "w") as fh:
@@ -653,9 +673,9 @@ def incremental_substring_dedup(
             k=k, text_col=text_col, id_col=id_col, fingerprint=fingerprint,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    writer = docs_stream.writeStream.foreachBatch(
+        keep_active_session(_process)
+    ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -675,7 +695,7 @@ def replay_incremental_substring_dedup(
 
     work = tempfile.mkdtemp(prefix="inc_subdedup_")
     stage = os.path.join(work, "stage")
-    docs = spark.read.parquet(documents_path).select("doc_id", "text")
+    docs = open_parquet(spark, documents_path).select("doc_id", "text")
     from .events import bounded_replay_shuffle, stage_ordered_chunks
 
     stage_ordered_chunks(docs, n_batches, ["doc_id"], stage)
@@ -694,7 +714,9 @@ def replay_incremental_substring_dedup(
             k=k,
         )
         q.awaitTermination()
-    return spark.read.schema(
-        "doc_id long, text string, n_tokens long, "
-        "sub_dup_windows long, sub_dup_tokens long"
-    ).parquet(os.path.join(work, "survivors"))
+    return open_parquet(
+        spark,
+        os.path.join(work, "survivors"),
+        schema="doc_id long, text string, n_tokens long, "
+        "sub_dup_windows long, sub_dup_tokens long",
+    )

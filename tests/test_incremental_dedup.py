@@ -8,8 +8,10 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 
 from pandasql_spark.operators.dedup import minhash_neardup_pairs
+from pandasql_spark.queries import REGISTRY
 from pandasql_spark.streaming.incremental import (
     process_batch,
     replay_incremental_dedup,
@@ -433,3 +435,14 @@ def test_store_fp_method_marker(spark, tmp_path):
     os.remove(os.path.join(store3, "_FP_METHOD"))
     process_substring_batch(batch(1), 1, store3, surv3, k=5)
     assert open(os.path.join(store3, "_FP_METHOD")).read() == "xxhash"
+
+
+@pytest.mark.parametrize("name", ["q63_incremental_dedup", "q99_crawl_ingest_stream"])
+def test_registry_replay_keeps_active_session(spark, name):
+    """A foreachBatch replay must leave the caller's session active:
+    PySpark makes the batch's cloned session active on its first
+    createDataFrame, and later get_spark() callers (read_csv(name=)'s
+    temp view, say) would otherwise land on the clone."""
+    assert SparkSession.getActiveSession() is spark
+    REGISTRY[name].fn(spark, SF).count()
+    assert SparkSession.getActiveSession() is spark

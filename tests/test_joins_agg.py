@@ -45,6 +45,19 @@ def test_join_left_right_on_keeps_both_keys(join_frames):
     assert_frame_equals_pandas(out, expected)
 
 
+def test_left_right_on_merge_projects_once(join_frames):
+    """One Project directly above the Join in the analyzed plan: the
+    aliased columns come out sorted from a single select."""
+    (df1, _), (dfm, _) = join_frames["ns1"], join_frames["ms2"]
+    for how in ("inner", "left", "semi"):
+        out = ps.merge(df1, dfm, left_on="n", right_on="m", how=how)
+        plan = out.to_spark()._jdf.queryExecution().analyzed()
+        assert plan.nodeName() == "Project"
+        assert plan.children().apply(0).nodeName() == "Join"
+        want = ["n", "s1"] if how == "semi" else ["m", "n", "s1", "s2"]
+        assert list(out.columns) == want
+
+
 def test_join_composite_keys(spark):
     a = pd.DataFrame(
         [{"a": str(i), "b": str(j), "c": 100 * i, "d": -j} for i in range(3) for j in range(3)]

@@ -262,6 +262,19 @@ def test_corrupt_payloads_raise():
             decode_avi(bad)
 
 
+@pytest.mark.parametrize("codec", ["dib", "mjpg"])
+def test_inflated_header_height_raises(codec):
+    """A corrupt biHeight claiming 2**30 rows is rejected from the
+    frames actually present, before any (n, h, w, 3) allocation."""
+    import struct
+
+    b = bytearray(encode_avi(_tiles(2, 8, 16), fps=5, codec=codec))
+    strf = b.index(b"strf") + 8  # BITMAPINFOHEADER after the chunk header
+    struct.pack_into("<i", b, strf + 8, 2**30)
+    with pytest.raises(VideoDecodeError):
+        decode_avi(bytes(b))
+
+
 def test_encode_validation():
     with pytest.raises(ValueError, match="uint8"):
         encode_avi(np.zeros((1, 2, 2, 3), np.float32))
