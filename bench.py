@@ -20,6 +20,8 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from pandasql_spark.queries import REGISTRY  # noqa: E402
 from pandasql_spark.session import get_spark  # noqa: E402
+from perfbench.host import cpu_jiffies, steal_of  # noqa: E402
+from perfbench.sparkstore import StatusStores  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -183,86 +185,46 @@ COMPOSITION_FOLD_QUERIES = frozenset({
 })
 
 
-def _exec_totals(spark) -> dict | None:
+def _cost_totals(spark) -> dict | None:
     """Cumulative executor totals — the host-independent cost axes
-    (VERDICT r17 task 2): summed task time, GC time, shuffle read/write
-    bytes and input bytes. Diffing two snapshots brackets one query's
-    cost without wall-clock noise.
-
-    r18 (same round, measurement hardening): read the in-process
-    AppStatusStore directly over py4j instead of the REST /executors
-    endpoint. The REST handler serves the SAME store (verified
-    byte-identical metric deltas across six interleaved REST-vs-store
-    probe arms, plans/r18/early_abba.jsonl), but the store read needs no
-    jetty server, so the bench session keeps the exact r17 config
-    (spark.ui.enabled=false) and the metrics cannot perturb or depend on
-    the UI stack."""
-    sc = spark.sparkContext
+    (VERDICT r17 task 2) — under the BENCH artifacts' keys and units
+    (ms, bytes). Diffing two snapshots brackets one query's cost without
+    wall-clock noise. Read from the in-process status store, so the
+    session keeps spark.ui.enabled=false; a failed read gives None."""
     try:
-        # drain the async listener bus so task-end events from the job
-        # that just finished are reflected in the status store
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:  # noqa: BLE001 — best-effort; store lag is ~ms
-        pass
-    try:
-        execs = sc._jsc.sc().statusStore().executorList(True)
-        tot = {
-            "task_time_ms": 0,
-            "gc_time_ms": 0,
-            "shuffle_read_b": 0,
-            "shuffle_write_b": 0,
-            "input_b": 0,
-        }
-        for i in range(execs.size()):
-            e = execs.apply(i)
-            tot["task_time_ms"] += e.totalDuration()
-            tot["gc_time_ms"] += e.totalGCTime()
-            tot["shuffle_read_b"] += e.totalShuffleRead()
-            tot["shuffle_write_b"] += e.totalShuffleWrite()
-            tot["input_b"] += e.totalInputBytes()
-        return tot
+        t = StatusStores(spark).executor_totals()
     except Exception:  # noqa: BLE001 — metrics must not kill the bench
         return None
-
-
-def _cpu_stat() -> tuple[float, float, float] | None:
-    """(busy, steal, total) jiffies from /proc/stat — the whole-VM CPU
-    ledger. `steal` is time the hypervisor ran someone else while this
-    VM wanted CPU: the r18 host-instability investigation (SCALING.md
-    round 18, steal section) caught neighbor-steal bursts inflating
-    identical-code queries 3–6x while load_avg read idle, so every
-    query now records the steal it ran under and adjudication stops
-    guessing."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [float(x) for x in parts[1:]]
-        user, nice, system, idle, iowait, irq, softirq, steal = (
-            vals + [0.0] * 8
-        )[:8]
-        busy = user + nice + system + irq + softirq
-        return busy, steal, busy + idle + iowait + steal
-    except Exception:  # noqa: BLE001 — non-Linux / unreadable: skip
-        return None
-
-
-def _cpu_probe(window_s: float = 1.0) -> dict | None:
-    """Direct idleness probe: busy/steal fraction of total capacity over
-    ``window_s``. Replaces trusting load_avg, whose floor on this VM
-    generation is ~2.5 at a measured 97%-idle (vmstat) — the load guard
-    can no longer distinguish idle from busy here."""
-    a = _cpu_stat()
-    if a is None:
-        return None
-    time.sleep(window_s)
-    b = _cpu_stat()
-    if b is None:
-        return None
-    span = max(b[2] - a[2], 1e-9)
     return {
-        "busy_frac": round((b[0] - a[0]) / span, 4),
-        "steal_frac": round((b[1] - a[1]) / span, 4),
-        "window_s": window_s,
+        "task_time_ms": round(t["task_s"] * 1000),
+        "gc_time_ms": round(t["gc_s"] * 1000),
+        "shuffle_read_b": round(t["shuffle_read_b"]),
+        "shuffle_write_b": round(t["shuffle_write_b"]),
+        "input_b": round(t["input_b"]),
+    }
+
+
+def _jiffies() -> tuple[float, float, float] | None:
+    """cpu_jiffies(), or None where the kernel CPU counters are unreadable."""
+    try:
+        return cpu_jiffies()
+    except (OSError, ValueError):
+        return None
+
+
+def _cpu_fracs(a, b) -> dict | None:
+    """Steal and busy fractions of the machine's capacity between two
+    _jiffies() readings, and steal's share of the CPU this VM wanted.
+    The r18 host-instability investigation (SCALING.md round 18, steal
+    section) caught neighbor-steal bursts inflating identical-code
+    queries 3–6x while load_avg read idle."""
+    if a is None or b is None:
+        return None
+    steal_frac, steal_share = steal_of(a, b)
+    return {
+        "steal_frac": round(steal_frac, 4),
+        "busy_frac": round((b[0] - a[0]) / max(b[2] - a[2], 1e-9), 4),
+        "steal_share": round(steal_share, 4),
     }
 
 
@@ -370,10 +332,14 @@ def main() -> None:
     spark = get_spark("pandasql-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     load_start = os.getloadavg()
-    # direct CPU idleness/steal probe at start (see _cpu_probe): load_avg
-    # has a ~2.5 floor on this VM generation at measured 97% idle, so the
+    # direct CPU idleness/steal probe at start, over 1 s: load_avg has a
+    # ~2.5 floor on this VM generation at measured 97% idle, so the
     # start-state record needs a signal that actually reads the CPU
-    cpu_start = _cpu_probe()
+    a = _jiffies()
+    time.sleep(1.0)
+    fracs = _cpu_fracs(a, _jiffies())
+    cpu_start = fracs and {"busy_frac": fracs["busy_frac"],
+                           "steal_frac": fracs["steal_frac"], "window_s": 1.0}
 
     # warmup: JVM, codegen, parquet footer cache
     REGISTRY["q02_filter_distinct"].fn(spark, SF_DIR).write.format("noop").mode(
@@ -421,8 +387,8 @@ def main() -> None:
     for name in HEADLINE:
         fn = REGISTRY[name].fn
         before_rdds = _rdd_ids(spark)
-        totals_before = _exec_totals(spark)
-        cpu_before = _cpu_stat()
+        totals_before = _cost_totals(spark)
+        cpu_before = _jiffies()
         try:
             runs = []
             for _ in range(3):
@@ -436,30 +402,18 @@ def main() -> None:
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
             timings[name] = round(min(runs), 3)
-            delta = _totals_delta(totals_before, _exec_totals(spark),
+            delta = _totals_delta(totals_before, _cost_totals(spark),
                                   len(runs))
             if delta is not None:
-                cpu_after = _cpu_stat()
-                if cpu_before is not None and cpu_after is not None:
-                    span = max(cpu_after[2] - cpu_before[2], 1e-9)
-                    # steal this query's timed runs sat under — the r18
-                    # drift-adjudication axis (steal bursts inflated
-                    # identical code 3–6x; SCALING.md round 18)
-                    steal = (cpu_after[1] - cpu_before[1]) / span
-                    busy = (cpu_after[0] - cpu_before[0]) / span
-                    delta["steal_frac"] = round(steal, 4)
-                    delta["busy_frac"] = round(busy, 4)
-                    # steal as a share of the CPU the query actually
-                    # contended for: a SINGLE-core phase (1-task stage,
-                    # one python worker) can run 10–50x slow while
-                    # global steal reads ~3% (one core of 32) — q66's
-                    # 40 s reading carried steal_frac 0.027 but
-                    # steal_share 0.46 (SCALING.md round 18, microbench:
-                    # identical numpy on identical data 9.05/6.02/0.19 s
-                    # back-to-back). This is the detector for it.
-                    delta["steal_share"] = round(
-                        steal / max(steal + busy, 1e-9), 4
-                    )
+                # steal this query's timed runs sat under — the r18
+                # drift-adjudication axis. steal_share is steal as a
+                # share of the CPU the query actually contended for: a
+                # SINGLE-core phase (1-task stage, one python worker)
+                # can run 10–50x slow while global steal reads ~3% (one
+                # core of 32) — q66's 40 s reading carried steal_frac
+                # 0.027 but steal_share 0.46 (SCALING.md round 18).
+                # This is the detector for it.
+                delta.update(_cpu_fracs(cpu_before, _jiffies()) or {})
                 cost_metrics[name] = delta
         except Exception as exc:  # noqa: BLE001 — keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
@@ -476,13 +430,13 @@ def main() -> None:
 
     _IVF_CACHE.clear()
     try:
-        totals_before = _exec_totals(spark)
+        totals_before = _cost_totals(spark)
         t0 = time.perf_counter()
         REGISTRY["q40_ann_ivf"].fn(spark, SF_DIR).write.format("noop").mode(
             "overwrite"
         ).save()
         timings["q40_ann_ivf_cold_build_probe"] = round(time.perf_counter() - t0, 3)
-        delta = _totals_delta(totals_before, _exec_totals(spark), 1)
+        delta = _totals_delta(totals_before, _cost_totals(spark), 1)
         if delta is not None:
             cost_metrics["q40_ann_ivf_cold_build_probe"] = delta
     except Exception as exc:  # noqa: BLE001

@@ -752,7 +752,38 @@ class BaseFrame:
         self.to_spark().write.mode(mode).options(**options).orc(path)
 
 
-class DataFrame(BaseFrame):
+class _UngroupedAggregates:
+    """The ungrouped aggregates of DataFrame and Projection (reference
+    core.py:219-241): one agg over EVERY column, collapsing to a pandas
+    scalar or Series (core.py:1162-1188), e.g. ``df['n'].sum()``. Not on
+    BaseFrame: aggregate results are frames too, and have none."""
+
+    def sum(self):
+        return _ungrouped_agg(self.to_spark(), "sum")
+
+    def count(self):
+        return _ungrouped_agg(self.to_spark(), "count")
+
+    def mean(self):
+        return _ungrouped_agg(self.to_spark(), "mean")
+
+    def min(self):
+        return _ungrouped_agg(self.to_spark(), "min")
+
+    def max(self):
+        return _ungrouped_agg(self.to_spark(), "max")
+
+    def prod(self):
+        return _ungrouped_agg(self.to_spark(), "prod")
+
+    def any(self):
+        return _ungrouped_agg(self.to_spark(), "any")
+
+    def all(self):
+        return _ungrouped_agg(self.to_spark(), "all")
+
+
+class DataFrame(_UngroupedAggregates, BaseFrame):
     """Named lazy relation (reference ``DataFrame``, core.py:497-531)."""
 
     def __init__(
@@ -1024,32 +1055,6 @@ class DataFrame(BaseFrame):
         keys = [by] if isinstance(by, str) else list(by)
         return GroupByDataFrame(self._sdf, keys, as_index=as_index)
 
-    # -- ungrouped aggregates (core.py:219-241): one agg over EVERY column,
-    # collapsing to a pandas Series (core.py:1162-1188).
-    def sum(self):
-        return _ungrouped_agg(self._sdf, "sum")
-
-    def count(self):
-        return _ungrouped_agg(self._sdf, "count")
-
-    def mean(self):
-        return _ungrouped_agg(self._sdf, "mean")
-
-    def min(self):
-        return _ungrouped_agg(self._sdf, "min")
-
-    def max(self):
-        return _ungrouped_agg(self._sdf, "max")
-
-    def prod(self):
-        return _ungrouped_agg(self._sdf, "prod")
-
-    def any(self):
-        return _ungrouped_agg(self._sdf, "any")
-
-    def all(self):
-        return _ungrouped_agg(self._sdf, "all")
-
     def agg(self, func):
         from .groupby import multi_agg_ungrouped
 
@@ -1112,7 +1117,7 @@ def _ungrouped_agg(sdf: SparkDataFrame, func: str):
     return Aggregate(sdf.agg(*exprs), cols, func)
 
 
-class Projection(BaseFrame, Expression):
+class Projection(_UngroupedAggregates, BaseFrame, Expression):
     """Column subset that doubles as an expression (reference
     ``Projection``, core.py:761-796). Column order follows SOURCE order,
     not request order (core.py:780)."""
@@ -1179,31 +1184,6 @@ class Projection(BaseFrame, Expression):
 
     def head(self, n: int = 5) -> "DataFrame":
         return DataFrame(sdf=self.to_spark().limit(n))
-
-    # ungrouped aggs on a projection (e.g. df['n'].sum() → scalar)
-    def sum(self):
-        return _ungrouped_agg(self.to_spark(), "sum")
-
-    def count(self):
-        return _ungrouped_agg(self.to_spark(), "count")
-
-    def mean(self):
-        return _ungrouped_agg(self.to_spark(), "mean")
-
-    def min(self):
-        return _ungrouped_agg(self.to_spark(), "min")
-
-    def max(self):
-        return _ungrouped_agg(self.to_spark(), "max")
-
-    def prod(self):
-        return _ungrouped_agg(self.to_spark(), "prod")
-
-    def any(self):
-        return _ungrouped_agg(self.to_spark(), "any")
-
-    def all(self):
-        return _ungrouped_agg(self.to_spark(), "all")
 
     def __hash__(self):  # Expression defines __eq__; keep hashable
         return id(self)

@@ -46,7 +46,7 @@ class Aggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> Any:
-        row = self._sdf.toPandas().iloc[0]
+        row = _fetch_pandas(self._sdf).iloc[0]
         if len(self._cols) == 1:
             return row[self._cols[0]]
         return pd.Series({c: row[c] for c in self._cols}, name=self._func)
@@ -265,7 +265,7 @@ class MultiAggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> pd.DataFrame:
-        row = self._sdf.toPandas().iloc[0]
+        row = _fetch_pandas(self._sdf).iloc[0]
         data: dict[str, dict[str, Any]] = {}
         for f, c in self._pairs:
             data.setdefault(c, {})[f] = row[f"{c}__{f}"]

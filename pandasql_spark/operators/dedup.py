@@ -949,12 +949,13 @@ def _phash64_batch(pxs) -> list:
     return out
 
 
-#: perceptual-hash kernels: name → pure-Python hash of a decoded
-#: pixel array. dhash = gradient structure (cheap, resize/re-encode
-#: robust); phash = DCT low-frequency structure (more robust to
-#: smooth global edits — gamma/brightness shifts flip gradient bits
-#: near ties but barely move the coefficient/median ORDER).
-_IMAGE_HASHES = {"dhash": _dhash64, "phash": _phash64}
+#: perceptual-hash kernels: name → batch hash of a list of decoded
+#: pixel arrays, bit-identical to the scalar `_dhash64`/`_phash64`.
+#: dhash = gradient structure (cheap, resize/re-encode robust); phash =
+#: DCT low-frequency structure (more robust to smooth global edits —
+#: gamma/brightness shifts flip gradient bits near ties but barely move
+#: the coefficient/median ORDER).
+_IMAGE_HASHES = {"dhash": _dhash64_batch, "phash": _phash64_batch}
 
 
 def image_dhash(
@@ -983,7 +984,7 @@ def image_dhash(
         raise ValueError(
             f"method must be one of {sorted(_IMAGE_HASHES)}, got {method!r}"
         )
-    hash_fn = _IMAGE_HASHES[method]
+    hash_batch = _IMAGE_HASHES[method]
 
     def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.imagecodec import ImageDecodeError, decode_image
@@ -999,12 +1000,7 @@ def image_dhash(
                     continue
                 oks.append(True)
                 pxs.append(px)
-            if method == "dhash":
-                fps = iter(_dhash64_batch(pxs))  # bit-identical, batched
-            elif method == "phash":
-                fps = iter(_phash64_batch(pxs))  # bit-identical, batched
-            else:
-                fps = iter([hash_fn(px) for px in pxs])
+            fps = iter(hash_batch(pxs))
             hs = [next(fps) if ok else None for ok in oks]
             yield pd.DataFrame(
                 {

@@ -287,6 +287,42 @@ def test_compute_cap_covers_grouped_and_arithmetic(spark):
         assert len(fetch()) == 50_000, name
 
 
+def test_compute_cap_covers_ungrouped_aggregates(spark):
+    """Ungrouped aggregates fetch through the capped path as well: under
+    a 1-byte cap they refuse, and under the auto cap all eight and
+    agg([...]) give pandas' values, their fetched frame equal to a raw
+    toPandas() of the same aggregate."""
+    from pandasql_spark.core import _fetch_pandas, set_max_fetch_bytes
+
+    pdf = pd.DataFrame({"n": [1, 2, 3, 4], "f": [0.5, 0.0, -2.0, 4.0]})
+    df = ps.DataFrame(pdf)
+    try:
+        set_max_fetch_bytes(1)
+        for fetch in (df.sum, df["n"].sum, lambda: df.agg(["sum", "min"])):
+            with pytest.raises(MemoryError, match="smaller subset"):
+                fetch().compute()
+    finally:
+        set_max_fetch_bytes(None)
+
+    for name in ("sum", "count", "mean", "min", "max", "prod", "any", "all"):
+        agg = getattr(df, name)()
+        pd.testing.assert_frame_equal(
+            _fetch_pandas(agg.to_spark()), agg.to_spark().toPandas()
+        )
+        expected = getattr(pdf, name)()
+        pd.testing.assert_series_equal(
+            agg.compute(), expected, check_dtype=False, check_names=False
+        )
+        assert getattr(df["n"], name)().compute() == expected["n"], name
+    multi = df.agg(["sum", "min", "max"])
+    pd.testing.assert_frame_equal(
+        _fetch_pandas(multi.to_spark()), multi.to_spark().toPandas()
+    )
+    pd.testing.assert_frame_equal(
+        multi.compute(), pdf.agg(["sum", "min", "max"]), check_dtype=False
+    )
+
+
 def test_compute_is_one_execution(spark):
     """compute() submits exactly one SQL execution on a join + groupby
     frame (the q05 shape) whether the cap is auto, finite and passing,

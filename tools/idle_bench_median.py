@@ -28,6 +28,8 @@ import subprocess
 import sys
 import time
 
+from perfbench.host import cpu_jiffies, steal_of
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
@@ -37,14 +39,14 @@ REPO = os.path.dirname(HERE)
 #: attempt: 3/3 contaminated, every sentinel_end ~0.156 s). Wait out
 #: the decay between runs.
 #:
-#: r18: the gate reads /proc/stat busy+steal directly instead of
+#: r18: the gate reads busy+steal jiffies directly instead of
 #: load_avg. On this VM generation load_avg has a ~2.5 floor at a
 #: measured 97%-idle (vmstat; SCALING.md round 18), so the old
 #: load-based loop NEVER passed and every "cooldown" was just the
 #: 420 s timeout — while actual neighbor-steal bursts (the thing that
 #: really inflates runs) sailed through it. Now: proceed once a 2 s
 #: window shows the machine quiet (<10% busy) and not being stolen
-#: from (<3%); fall back to load_avg only if /proc/stat is unreadable.
+#: from (<3%); fall back to load_avg only if the jiffies are unreadable.
 COOLDOWN_TARGET = 1.2
 COOLDOWN_MAX_S = 420
 BUSY_TARGET = 0.10
@@ -54,22 +56,13 @@ STEAL_TARGET = 0.03
 def _cpu_window(window_s: float = 2.0) -> tuple[float, float] | None:
     """(busy_frac, steal_frac) of total CPU capacity over window_s."""
     try:
-        def snap() -> tuple[float, float, float]:
-            with open("/proc/stat") as f:
-                v = [float(x) for x in f.readline().split()[1:]]
-            user, nice, system, idle, iowait, irq, softirq, steal = (
-                v + [0.0] * 8
-            )[:8]
-            busy = user + nice + system + irq + softirq
-            return busy, steal, busy + idle + iowait + steal
-
-        a = snap()
+        a = cpu_jiffies()
         time.sleep(window_s)
-        b = snap()
-        span = max(b[2] - a[2], 1e-9)
-        return (b[0] - a[0]) / span, (b[1] - a[1]) / span
-    except Exception:  # noqa: BLE001 — non-Linux: no probe
+        b = cpu_jiffies()
+    except (OSError, ValueError):  # non-Linux: no probe
         return None
+    busy_frac = (b[0] - a[0]) / max(b[2] - a[2], 1e-9)
+    return busy_frac, steal_of(a, b)[0]
 
 
 def cooldown() -> None:

@@ -5,7 +5,7 @@ cache contamination) over the scan-sensitive watchlist in
 `tools/scan_floors.json` and asserts no query's TOTAL parquet bytes
 read at sf0.01 regressed above its recorded floor (+15% ratio
 tolerance — an accidental extra corpus pass on these shapes adds
-17–50%, so the tripwire fires well above REST-metric unit rounding).
+17–50%, so the tripwire fires well above the metric's unit rounding).
 The r15 auditor caught two plan-text lies — the
 lazy-persist race and the AQE broadcast-subtree ReusedExchange that
 never reused at runtime — so this gate runs on FILE BYTES, the only
@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 from concurrent.futures import ThreadPoolExecutor
@@ -34,71 +33,40 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 FLOORS_PATH = os.path.join(HERE, "scan_floors.json")
 TOL = 0.15  # ratio tolerance; smallest real regression on the list ~1.17x
-_PORT0 = 4200
 
 
-def probe(qname: str, port: int) -> int:
+def probe(qname: str) -> int:
     """Run one fresh-session probe; return TOTAL parquet bytes read.
 
-    Attribution-free on purpose: path-based scans print a bare
-    'Scan parquet' node name, so per-table split is unreliable — but
-    a regressed shape (one more corpus pass) always moves the total
-    by at least a full table size, which the tolerance never hides."""
+    One process per query: the parquet schema memo is process-wide, and
+    a query must not inherit another's memo or cache. Attribution-free
+    on purpose: a regressed shape (one more corpus pass) always moves
+    the total by at least a full table size, which the tolerance never
+    hides."""
     env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "scan_probe.py"), qname, str(port)],
+        [sys.executable, os.path.join(HERE, "scan_probe.py"), qname],
         capture_output=True, text=True, env=env, cwd=REPO, timeout=600,
     )
-    # primary: the exact machine-readable total scan_probe prints
     mline = next(
         (ln for ln in out.stdout.splitlines()
          if ln.startswith(f"PROBE_TOTAL_BYTES {qname} ")), None
     )
-    if mline is not None:
-        total = int(mline.rsplit(" ", 1)[1])
-    else:
-        # fallback: scrape the human PROBE line (older probe output)
-        line = next(
-            (ln for ln in out.stdout.splitlines() if "PROBE " in ln), None
+    if mline is None:
+        raise RuntimeError(
+            f"{qname}: no PROBE_TOTAL_BYTES line\n--- stdout\n"
+            f"{out.stdout[-2000:]}\n--- stderr\n{out.stderr[-2000:]}"
         )
-        if line is None:
-            raise RuntimeError(
-                f"{qname}: no PROBE line\n--- stdout\n{out.stdout[-2000:]}"
-                f"\n--- stderr\n{out.stderr[-2000:]}"
-            )
-        total = 0.0
-        for part in line.split("::", 1)[1].split("|"):
-            m = re.search(r"([\d.]+) B \(", part)
-            if m:
-                total += float(m.group(1))
-            else:
-                # "<table>: X.XX scans" form — convert via table size
-                m2 = re.search(r"(\w+): ([\d.]+) scans", part)
-                if m2:
-                    total += float(m2.group(2)) * _table_size(m2.group(1))
-        total = int(total)
+    total = int(mline.rsplit(" ", 1)[1])
     if total <= 0:
         # every watchlist query reads parquet; zero means the probe or
-        # the REST metric broke, and a broken probe must NEVER read as
+        # the store metric broke, and a broken probe must NEVER read as
         # a green gate (r16 review finding)
         raise RuntimeError(
-            f"{qname}: probe measured 0 bytes read — probe/REST-metric "
+            f"{qname}: probe measured 0 bytes read — probe/store-metric "
             f"breakage, not a real floor\n--- stdout\n{out.stdout[-2000:]}"
         )
     return total
-
-
-_SF = "/root/testdata/sf0.01"
-
-
-def _table_size(table: str) -> int:
-    p = os.path.join(_SF, f"{table}.parquet")
-    if os.path.isfile(p):
-        return os.path.getsize(p)
-    return sum(
-        os.path.getsize(os.path.join(r, x))
-        for r, _, fs in os.walk(p) for x in fs
-    )
 
 
 def main() -> int:
@@ -108,9 +76,7 @@ def main() -> int:
     names = args or sorted(floors)
 
     with ThreadPoolExecutor(max_workers=4) as ex:
-        futs = {
-            n: ex.submit(probe, n, _PORT0 + i) for i, n in enumerate(names)
-        }
+        futs = {n: ex.submit(probe, n) for n in names}
         measured = {n: f.result() for n, f in futs.items()}
 
     bad: list[str] = []

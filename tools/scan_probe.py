@@ -1,102 +1,57 @@
-"""Generic scan-audit probe: run one registry query in a fresh session,
-then sum REST scan-node 'size of files read' and report eff_scans per
-source table (bytes read / file size)."""
-import json
-import os
-import re
-import sys
-import urllib.request
-from collections import defaultdict
+"""Scan-audit probe: run one registry query in a fresh session and sum
+the parquet bytes its scans read.
 
+    PYTHONPATH=. python tools/scan_probe.py <query_name>
+
+Prints a human PROBE line and the exact machine-readable total that
+tools/scan_gate.py reads. The total is every SQL execution's scan-node
+``size of files read``, read from the in-process SQL status store
+(perfbench.sparkstore), so the session runs with the UI off. This is the
+r15 auditor that caught the lazy-persist race class (SCALING.md r15):
+plan text cannot show it — only file-byte accounting can.
+"""
+import sys
+
+from perfbench.sparkstore import StatusStores
 from pyspark.sql import SparkSession
 
 sf = "/root/testdata/sf0.01"
-qname = sys.argv[1]
-port = sys.argv[2] if len(sys.argv) > 2 else "4096"
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "true")
-    .config("spark.ui.port", port)
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
 
-from pandasql_spark.queries import REGISTRY  # noqa: E402
+def files_read_bytes(stores: StatusStores, executions) -> tuple[int, int]:
+    """(total bytes, scans that read any) of ``size of files read``
+    over ``executions``."""
+    sizes = [
+        value
+        for e in executions
+        for _, value in stores.node_metrics(e.id, {"size of files read"})
+        if value > 0
+    ]
+    return int(sum(sizes)), len(sizes)
 
-n = REGISTRY[qname].fn(spark, sf).count()
 
-# query the port Spark ACTUALLY bound, not the requested one: when the
-# requested port is taken, spark.port.maxRetries binds port+1 silently
-# and the REST read would attribute ANOTHER app's scan bytes to this
-# query (r16 review finding — floors could be recorded off the wrong
-# process with no error)
-ui_url = spark.sparkContext.uiWebUrl
-base = f"{ui_url}/api/v1/applications"
-app_id = json.load(urllib.request.urlopen(base))[0]["id"]
-sqls = json.load(
-    urllib.request.urlopen(
-        f"{base}/{app_id}/sql?details=true&planDescription=true&length=2000"
+def main() -> int:
+    qname = sys.argv[1]
+    # local[8] and 8 shuffle partitions: the session every committed
+    # floor in tools/scan_floors.json was recorded under
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-)
-UNITS = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3}
+    spark.sparkContext.setLogLevel("ERROR")
+
+    from pandasql_spark.queries import REGISTRY
+
+    n = REGISTRY[qname].fn(spark, sf).count()
+    stores = StatusStores(spark)
+    total, nodes = files_read_bytes(stores, stores.executions_since(0))
+    print(f"PROBE {qname} rows={n} :: {total} B ({nodes} scans)")
+    print(f"PROBE_TOTAL_BYTES {qname} {total}")
+    spark.stop()
+    return 0
 
 
-def parse_size(s):
-    m = re.match(r"\s*([\d.]+)\s*(B|KiB|MiB|GiB)", s)
-    return float(m.group(1)) * UNITS[m.group(2)] if m else 0.0
-
-
-# attribute scans to tables via node name ("Scan parquet <path or rel>")
-per = defaultdict(float)
-cnt = defaultdict(int)
-for q in sqls:
-    for node in q.get("nodes", []):
-        name = node.get("nodeName", "")
-        if "Scan" not in name:
-            continue
-        for m in node.get("metrics", []):
-            if m["name"] == "size of files read":
-                b = parse_size(m["value"])
-                if b > 0:
-                    per[name] += b
-                    cnt[name] += 1
-
-tables = {}
-for f in os.listdir(sf):
-    if f.endswith(".parquet"):
-        p = os.path.join(sf, f)
-        tables[f.replace(".parquet", "")] = (
-            os.path.getsize(p)
-            if os.path.isfile(p)
-            else sum(
-                os.path.getsize(os.path.join(r, x))
-                for r, _, fs in os.walk(p)
-                for x in fs
-            )
-        )
-
-out = []
-for name, b in sorted(per.items()):
-    # node names look like "Scan parquet " or include the relation
-    matched = None
-    for t, size in tables.items():
-        if t in name:
-            matched = (t, size)
-            break
-    if matched:
-        out.append(f"{matched[0]}: {b/matched[1]:.2f} scans ({cnt[name]} nodes)")
-    else:
-        out.append(f"{name}: {int(b)} B ({cnt[name]} nodes)")
-print(f"PROBE {qname} rows={n} :: " + " | ".join(out) if out else f"PROBE {qname} rows={n} :: no file reads")
-# machine-readable total for tools/scan_gate.py — the human PROBE line
-# above is lossy (unit-rounded, format-coupled); this is the exact sum
-print(f"PROBE_TOTAL_BYTES {qname} {int(sum(per.values()))}")
-spark.stop()
-
-# Usage: PYTHONPATH=. python tools/scan_probe.py <query_name> [ui_port]
-# Prints eff_scans (true parquet bytes read / table size) per source
-# table for ONE registry query in a fresh session. This is the r15
-# auditor that caught the lazy-persist race class (SCALING.md r15):
-# plan text cannot show it — only file-byte accounting can.
+if __name__ == "__main__":
+    sys.exit(main())
